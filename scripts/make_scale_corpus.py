@@ -100,6 +100,7 @@ def main() -> None:
     langs = tbl.column("lang").to_pylist()
     sources = tbl.column("source").to_pylist()
     n_docs = len(doc_ids)
+    dmax = max(doc_ids) + 1
     out_rows = {"doc_id": [], "text": [], "lang": [], "source": [],
                 "n_chars": []}
     for c in range(COPIES):
@@ -114,7 +115,7 @@ def main() -> None:
                     if j % 2 == 1:
                         rebuilt.append(tokc)
                 t = " ".join(rebuilt)
-            out_rows["doc_id"].append(doc_ids[i] + c * (max(doc_ids) + 1))
+            out_rows["doc_id"].append(doc_ids[i] + c * dmax)
             out_rows["text"].append(t)
             out_rows["lang"].append(langs[i])
             out_rows["source"].append(sources[i])

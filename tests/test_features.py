@@ -451,3 +451,82 @@ def test_impute_validation(spark):
     df2 = spark.createDataFrame([(1.0, True)], "v double, v_was_null boolean")
     with pytest.raises(ValueError, match="v_was_null"):
         FE.impute(df2, "v")
+
+
+# ---- count-min sketch join form, salted-aggregation default salt
+
+
+def test_cms_broadcast_join_form_matches_literal_form(spark):
+    from topo_descriptors_spark.operators import features as FT
+
+    rows = [(i % 23,) for i in range(500)]
+    df = spark.createDataFrame(rows, "k int")
+    lit_form = {r.k: (r.est, r.n_true) for r in
+                FT.cms_counts(df, "k", depth=4, width=64).collect()}
+    # force the broadcast-join path at the same grid size
+    old = FT._CMS_LITERAL_CELLS
+    FT._CMS_LITERAL_CELLS = 1
+    try:
+        join_form = {r.k: (r.est, r.n_true) for r in
+                     FT.cms_counts(df, "k", depth=4, width=64).collect()}
+    finally:
+        FT._CMS_LITERAL_CELLS = old
+    assert lit_form == join_form
+
+
+def test_cms_user_sized_grid_does_not_embed_literals(spark):
+    from topo_descriptors_spark.operators.features import cms_counts
+
+    rows = [("a",)] * 5 + [("b",)] * 3 + [("c",)]
+    df = spark.createDataFrame(rows, "k string")
+    # 4 x 8192 = 32768 cells > threshold -> broadcast-join path; a wide
+    # sketch on tiny data is collision-free, so est == n_true exactly
+    out = {r.k: (r.est, r.n_true) for r in
+           cms_counts(df, "k", depth=4, width=8192).collect()}
+    assert out == {"a": (5, 5), "b": (3, 3), "c": (1, 1)}
+
+
+def test_cms_join_fallback_plan_is_broadcast_only(spark):
+    from topo_descriptors_spark.operators import features as FT
+
+    df = spark.createDataFrame([("a",)] * 9 + [("b",)], "k string")
+    old = FT._CMS_LITERAL_CELLS
+    FT._CMS_LITERAL_CELLS = 1
+    try:
+        out = FT.cms_counts(df, "k", depth=4, width=16)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        FT._CMS_LITERAL_CELLS = old
+    # one broadcast join per depth level, never a shuffled join
+    assert plan.count("BroadcastHashJoin") == 4
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+
+
+def test_salted_agg_skips_map_columns_in_default_salt(spark):
+    from topo_descriptors_spark.operators.features import salted_agg
+
+    df = spark.createDataFrame(
+        [("a", 1.0, {"x": 1}), ("a", 2.0, {"y": 2}), ("b", 3.0, {"z": 3})],
+        "k string, v double, payload map<string,int>",
+    )
+    # pre-fix this raised at analysis time (xxhash64 rejects maps)
+    got = {r.k: (r.v_count, r.v_sum) for r in
+           salted_agg(df, "k", {"v": ["count", "sum"]}, salt_buckets=4).collect()}
+    assert got == {"a": (2, 3.0), "b": (1, 3.0)}
+
+
+def test_xxhashable_type_predicate():
+    from pyspark.sql import types as T
+
+    from topo_descriptors_spark.operators.features import _xxhashable
+
+    assert _xxhashable(T.StringType())
+    assert _xxhashable(T.ArrayType(T.IntegerType()))
+    assert not _xxhashable(T.MapType(T.StringType(), T.IntegerType()))
+    assert not _xxhashable(
+        T.ArrayType(T.MapType(T.StringType(), T.IntegerType()))
+    )
+    assert not _xxhashable(
+        T.StructType([T.StructField(
+            "m", T.MapType(T.StringType(), T.IntegerType()))])
+    )

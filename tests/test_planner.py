@@ -24,10 +24,10 @@ def test_round_up_to_odd_scalar():
     assert planner.round_up_to_odd(10.2).tolist() == 11
 
 
-def test_scales_to_frames():
+def test_frame_half_width():
     # 50 m grid: 150 m -> 3 px (k=1), 450 m -> 9 px (k=4)
-    assert planner.scales_to_frames([150, 450], 50.0) == [3, 9]
-    assert planner.frame_half_width(9) == 4
+    assert planner.round_up_to_odd(np.array([150, 450]) / 50.0).tolist() == [3, 9]
+    assert [planner.frame_half_width(d) for d in (3, 9)] == [1, 4]
 
 
 def test_grid_resolution_uniform():

@@ -351,14 +351,16 @@ def test_temporal_split_validates_frac(spark):
 def test_cosine_topk_join_matches_bruteforce(spark):
     import numpy as np
 
-    from topo_descriptors_spark.operators.similarity import cosine_topk_join
+    from topo_descriptors_spark.operators.similarity import (
+        cosine_topk_join_blocked,
+    )
 
     rng = np.random.RandomState(3)
     vecs = [(i, [float(x) for x in rng.randn(8)]) for i in range(30)]
     df = spark.createDataFrame(vecs, "vec_id int, embedding array<double>")
     qs = df.where("vec_id % 5 = 0")
     corpus = df.where("vec_id % 5 != 0")
-    out = cosine_topk_join(qs, corpus, k=3).collect()
+    out = cosine_topk_join_blocked(qs, corpus, k=3).collect()
     got = {}
     for r in out:
         got.setdefault(r.id_q, []).append((r.rank, r.id_c))
@@ -373,30 +375,6 @@ def test_cosine_topk_join_matches_bruteforce(spark):
         )[:3]
         want = [(-s[1]) for s in sims]
         assert [c for _, c in sorted(got[qi])] == want, qi
-
-
-def test_cosine_topk_join_guard(spark):
-    from topo_descriptors_spark.operators.similarity import cosine_topk_join
-
-    df = spark.createDataFrame(
-        [(i, [1.0, 0.0]) for i in range(10)], "vec_id int, embedding array<double>"
-    )
-    with pytest.raises(ValueError, match="max_query_rows"):
-        cosine_topk_join(df, df, max_query_rows=5)
-
-
-def test_cosine_topk_join_broadcasts_queries(spark):
-    from topo_descriptors_spark.operators.similarity import cosine_topk_join
-
-    df = spark.createDataFrame(
-        [(i, [1.0, float(i)]) for i in range(10)],
-        "vec_id int, embedding array<double>",
-    )
-    plan = (
-        cosine_topk_join(df.where("vec_id < 3"), df.where("vec_id >= 3"), k=2)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
 # ------------------------------------------------------ stream enrichment
@@ -575,40 +553,8 @@ def test_dataset_card_numbers(spark):
 # ------------------------------------------ Arrow/BLAS retrieval join (r5)
 
 
-def test_cosine_topk_join_blocked_equals_base(spark):
-    """The Arrow/BLAS form must be row-identical to the zip_with form on
-    data with duplicate vectors (rounded-cosine ties) and a zero-norm
-    row on each side."""
-    import numpy as np
-
-    from topo_descriptors_spark.operators.similarity import (
-        cosine_topk_join,
-        cosine_topk_join_blocked,
-    )
-
-    rng = np.random.RandomState(11)
-    rows = [(i, [float(x) for x in rng.randn(6)]) for i in range(40)]
-    rows[7] = (7, rows[12][1])          # exact duplicate -> cosine tie
-    rows[3] = (3, [0.0] * 6)            # zero-norm corpus row
-    rows[30] = (30, [0.0] * 6)          # zero-norm query row
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    qs = df.where("vec_id % 5 = 0")
-    corpus = df.where("vec_id % 5 != 0").repartition(4)  # multi-batch
-
-    base = cosine_topk_join(qs, corpus, k=4).toPandas()
-    blocked = cosine_topk_join_blocked(qs, corpus, k=4).toPandas()
-    key = ["id_q", "rank"]
-    b = base.sort_values(key).reset_index(drop=True)
-    a = blocked.sort_values(key).reset_index(drop=True)
-    assert list(a.columns) == list(b.columns) == ["id_q", "id_c", "cosine", "rank"]
-    assert a[["id_q", "id_c", "rank"]].equals(b[["id_q", "id_c", "rank"]])
-    assert np.allclose(a.cosine.to_numpy(), b.cosine.to_numpy())
-    assert 30 not in set(a.id_q) and 3 not in set(a.id_c)
-
-
 def test_cosine_topk_join_blocked_guards(spark):
     from topo_descriptors_spark.operators.similarity import (
-        cosine_topk_join,
         cosine_topk_join_blocked,
     )
 
@@ -621,8 +567,6 @@ def test_cosine_topk_join_blocked_guards(spark):
     dup = df.union(df.limit(1))
     with pytest.raises(ValueError, match="distinct"):
         cosine_topk_join_blocked(dup, df)
-    with pytest.raises(ValueError, match="distinct"):
-        cosine_topk_join(dup, df)
     # dimension mismatch raises inside the kernel (guard, not truncate)
     q3 = spark.createDataFrame(
         [(0, [1.0, 0.0, 0.0])], "vec_id int, embedding array<double>"

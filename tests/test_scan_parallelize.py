@@ -96,6 +96,24 @@ def test_big_input_short_circuits_footer_reads(tmp_path):
     tio._SCAN_META.clear()
 
 
+def test_footer_memo_tracks_rewrites(tmp_path):
+    """A parquet file rewritten at the same path with a different
+    row-group count must not be served from the memo."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "t.parquet")
+    tbl = pa.table({"k": list(range(1000))})
+    pq.write_table(tbl, p, row_group_size=1000)
+    assert tio._parquet_meta(p, big_cutoff=10**12)[1:] == (1, 1000)
+    before = os.stat(p).st_mtime_ns
+    pq.write_table(tbl, p, row_group_size=250)
+    if os.stat(p).st_mtime_ns == before:  # coarse filesystem clock
+        os.utime(p, ns=(before + 10**9, before + 10**9))
+    assert tio._parquet_meta(p, big_cutoff=10**12)[1:] == (4, 1000)
+    tio._SCAN_META.clear()
+
+
 def test_gate_state_partitions_scale_with_input(spark, monkeypatch):
     import __spark_entry__ as entry
 
@@ -112,3 +130,15 @@ def test_gate_state_partitions_scale_with_input(spark, monkeypatch):
     assert entry._gate_state_partitions(spark, "/x", light_state=True) == max(
         8, spark.sparkContext.defaultParallelism
     )
+
+    # unknown size (getsize raises, e.g. a non-local path) fails open;
+    # a 64-slot context tells fan-out apart from the 8-partition floor
+    from types import SimpleNamespace
+
+    def boom(p):
+        raise OSError("no such file")
+
+    monkeypatch.setattr(os.path, "getsize", boom)
+    wide = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=64))
+    for light in (False, True):
+        assert entry._gate_state_partitions(wide, "/x", light_state=light) == 64

@@ -4,6 +4,8 @@ Pure-function tests for the zip-cache machinery in ``session.py`` —
 no SparkSession needed: ``_pyfiles_has_package`` parsing and the
 ``_build_package_zip`` fingerprint/concurrency behavior are what the
 advice items targeted, and both are testable with tmp dirs alone.
+The last test drives the shipped zip end to end in a fresh Python
+process whose import path lacks the package.
 """
 
 import os
@@ -125,3 +127,36 @@ def test_prune_skips_recent_and_tolerates_vanished(fake_pkg):
     _build_package_zip(str(fake_pkg))
     assert os.path.isfile(recent)
     assert not os.path.isfile(old)
+
+
+# ------------------------------------------ package shipping end to end
+
+
+def test_arrow_kernels_run_without_package_on_worker_path(tmp_path):
+    """Workers must not need the repo on their import path: get_spark
+    auto-ships the package zip (cloudpickle serializes module-level
+    kernel helpers BY REFERENCE — pre-fix this died mid-task with
+    ModuleNotFoundError whenever the working directory wasn't the repo)."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys; sys.path.insert(0, %r)\n"
+        "from topo_descriptors_spark import get_spark\n"
+        "from topo_descriptors_spark.operators import tiles as T\n"
+        "from pyspark.sql import functions as F\n"
+        "spark = get_spark('iso-pin', master='local[2]', shuffle_partitions=4)\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        "g = spark.range(256).select((F.col('id')/16).cast('int').alias('y'),"
+        " F.pmod(F.col('id'), F.lit(16)).cast('int').alias('x'),"
+        " (F.col('id')*1.0).alias('value'))\n"
+        "assert T.tpi_2d(g, (16, 16), size=5, tile_size=8).count() == 256\n"
+        "print('ISO-OK')\n" % repo
+    )
+    env = {k: v for k, v in __import__("os").environ.items()
+           if k != "PYTHONPATH"}  # the env var would mask the bug
+    r = subprocess.run([sys.executable, "-c", script], cwd=str(tmp_path),
+                       env=env, capture_output=True, text=True, timeout=300)
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert "ISO-OK" in r.stdout

@@ -35,6 +35,70 @@ def _numpy_topk(vecs, k):
     return out
 
 
+def _numpy_ann_topk(rows, k, n_planes, seed=7, round_digits=9):
+    """Reference for ann_topk_blocked: drop NULL/empty/zero-norm vectors,
+    bucket by sign pattern over the same seeded hyperplanes, then the
+    exact per-bucket cosine top-k (rounded before ranking, id-ascending
+    tie-break).  Returns a frame of (id_a, rank, id_b, cosine)."""
+    rows = [(i, np.asarray(v, dtype=np.float64)) for i, v in rows
+            if v is not None and len(v) and np.linalg.norm(v) > 0]
+    ids = np.array([i for i, _ in rows])
+    m = np.stack([v for _, v in rows])
+    planes = S.hyperplanes(m.shape[1], n_planes, seed)
+    buckets = ((m @ planes.T) > 0).astype(np.int64) @ (1 << np.arange(n_planes))
+    m = m / np.linalg.norm(m, axis=1, keepdims=True)
+    out = []
+    for b in np.unique(buckets):
+        sel = np.flatnonzero(buckets == b)
+        cos = np.round(m[sel] @ m[sel].T, round_digits)
+        for i, a in enumerate(sel):
+            order = sorted((j for j in range(len(sel)) if j != i),
+                           key=lambda j: (-cos[i, j], ids[sel[j]]))
+            for rank, j in enumerate(order[:k], 1):
+                out.append((ids[a], rank, ids[sel[j]], cos[i, j]))
+    return pd.DataFrame(out, columns=["id_a", "rank", "id_b", "cosine"])
+
+
+def _assert_ann_matches_reference(got, want):
+    key = ["id_a", "rank"]
+    got = got.sort_values(key).reset_index(drop=True)
+    want = want.sort_values(key).reset_index(drop=True)
+    assert len(got) == len(want)
+    assert got["id_a"].tolist() == want["id_a"].tolist()
+    assert got["id_b"].tolist() == want["id_b"].tolist()
+    assert np.allclose(got["cosine"], want["cosine"], atol=1e-9)
+
+
+def _numpy_join_topk(queries, corpus, k):
+    """Brute-force reference for cosine_topk_join_blocked: for each
+    query id, the k corpus ids by rounded cosine desc, id asc, with
+    NULL and zero-norm vectors excluded on both sides.  Returns
+    {id_q: [(id_c, cosine), ...]}."""
+    def usable(rows):
+        return {i: np.asarray(v, dtype=np.float64) for i, v in rows
+                if v is not None and np.linalg.norm(v) > 0}
+
+    qd, cd = usable(queries), usable(corpus)
+    out = {}
+    for qi, qv in qd.items():
+        sims = sorted(
+            (round(float(qv @ cv / (np.linalg.norm(qv) * np.linalg.norm(cv))), 9), -ci)
+            for ci, cv in cd.items()
+        )[::-1][:k]
+        out[qi] = [(-c, s) for s, c in sims]
+    return out
+
+
+def _assert_join_matches_reference(rows, want):
+    got = {}
+    for r in sorted(rows, key=lambda r: (r.id_q, r.rank)):
+        got.setdefault(r.id_q, []).append((r.id_c, r.cosine))
+    assert set(got) == set(want)
+    for qi, lst in want.items():
+        assert [c for c, _ in got[qi]] == [c for c, _ in lst], qi
+        assert np.allclose([s for _, s in got[qi]], [s for _, s in lst])
+
+
 def test_cosine_topk_vs_numpy(emb):
     df, vecs = emb
     out = S.cosine_topk(df, k=5).toPandas()
@@ -63,7 +127,7 @@ def test_near_dup_pairs(emb):
 def test_ann_recall(emb):
     df, vecs = emb
     exact = S.cosine_topk(df, k=3).toPandas()
-    approx = S.ann_topk_lsh(df, k=3, n_planes=2).toPandas()
+    approx = S.ann_topk_blocked(df, k=3, n_planes=2).toPandas()
     e = {(r.id_a, r.id_b) for r in exact.itertuples()}
     a = {(r.id_a, r.id_b) for r in approx.itertuples()}
     recall = len(e & a) / len(e)
@@ -73,16 +137,11 @@ def test_ann_recall(emb):
     assert (3, 7) in a
 
 
-def test_ann_blocked_equals_expression_form(emb):
-    df, _ = emb
-    a = S.ann_topk_lsh(df, k=3, n_planes=4).toPandas()
-    b = S.ann_topk_blocked(df, k=3, n_planes=4).toPandas()
-    key = ["id_a", "rank"]
-    a = a.sort_values(key).reset_index(drop=True)
-    b = b.sort_values(key).reset_index(drop=True)
-    assert len(a) == len(b)
-    assert a["id_b"].tolist() == b["id_b"].tolist()
-    assert np.allclose(a["cosine"], b["cosine"], atol=1e-9)
+def test_ann_blocked_equals_numpy_reference(emb):
+    df, vecs = emb
+    got = S.ann_topk_blocked(df, k=3, n_planes=4).toPandas()
+    want = _numpy_ann_topk(list(enumerate(vecs)), k=3, n_planes=4)
+    _assert_ann_matches_reference(got, want)
 
 
 def test_ivf_recall_beats_lsh(emb):
@@ -98,14 +157,6 @@ def test_ivf_recall_beats_lsh(emb):
     # every query answered with exactly k (or fewer if probes tiny)
     counts = ivf.groupby("id_a").size()
     assert counts.max() <= 3
-
-
-def test_ann_plan_is_bucketed_join(emb):
-    df, _ = emb
-    plan = S.ann_topk_lsh(df, k=3, n_planes=4)._jdf.queryExecution().executedPlan().toString()
-    # candidate join must be an equi-join on the bucket (hash or sort-merge),
-    # NOT a cartesian/broadcast-nested-loop
-    assert "CartesianProduct" not in plan
 
 
 def test_ivf_lloyd_refinement_improves_recall(emb):
@@ -141,7 +192,6 @@ def test_ann_planning_launches_no_job(emb):
 
     guarded.first = boom
     guarded.head = boom
-    S.ann_topk_lsh(guarded, k=3, n_planes=4, dim=16)
     S.ann_topk_blocked(guarded, k=3, n_planes=4, dim=16)
     S.embedding_near_dup_pairs(guarded, threshold=0.99, dim=16)
 
@@ -276,7 +326,7 @@ def test_zero_norm_vectors_excluded_everywhere(spark):
     import pandas as pd
 
     from topo_descriptors_spark.operators.similarity import (
-        ann_topk_lsh,
+        ann_topk_blocked,
         cosine_topk,
         embedding_cosine_pairs_exact,
         embedding_near_dup_pairs,
@@ -301,35 +351,159 @@ def test_zero_norm_vectors_excluded_everywhere(spark):
     lsh = embedding_near_dup_pairs(df, threshold=0.5, n_planes=2, dim=2).toPandas()
     assert 3 not in set(lsh.id_a) and 3 not in set(lsh.id_b)
 
-    ann = ann_topk_lsh(df, k=2, n_planes=2, dim=2).toPandas()
+    ann = ann_topk_blocked(df, k=2, n_planes=2, dim=2).toPandas()
     assert 3 not in set(ann.id_a) and 3 not in set(ann.id_b)
     assert not ann.cosine.isna().any()
 
 
-def test_ann_blocked_excludes_degenerate_embeddings_like_lsh_twin(spark):
+def test_ann_blocked_excludes_degenerate_embeddings(spark):
     """Regression pin (r8 edge probe): zero-norm and empty-array rows
     reached ann_topk_blocked's BLAS kernels — NaN normalization for the
     zero-norms and a raw np.stack ValueError (stage killer) for the
-    empties — while the expression twin filtered them.  Both twins must
-    exclude them and agree; an all-degenerate input yields empty, not a
-    driver TypeError from the dim probe."""
-    pdf = pd.DataFrame(
-        {
-            "vec_id": [1, 2, 3, 4],
-            "embedding": [[0.0, 0.0], [], [1.0, 0.25], [0.9, 0.3]],
-        }
-    )
-    df = spark.createDataFrame(pdf)
+    empties.  They must be excluded, leaving the reference result; an
+    all-degenerate input yields empty, not a TypeError from the dim
+    probe."""
+    rows = [(1, [0.0, 0.0]), (2, []), (3, [1.0, 0.25]), (4, [0.9, 0.3])]
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=["vec_id", "embedding"]))
     blocked = S.ann_topk_blocked(df, k=2, n_planes=2).toPandas()
-    expr = S.ann_topk_lsh(df, k=2, n_planes=2).toPandas()
-    key = ["id_a", "rank"]
-    pd.testing.assert_frame_equal(
-        blocked.sort_values(key).reset_index(drop=True)[["id_a", "id_b", "cosine"]],
-        expr.sort_values(key).reset_index(drop=True)[["id_a", "id_b", "cosine"]],
-    )
+    _assert_ann_matches_reference(blocked, _numpy_ann_topk(rows, k=2, n_planes=2))
     assert set(blocked.id_a) <= {3, 4}
 
     degenerate = spark.createDataFrame(
         pd.DataFrame({"vec_id": [1, 2], "embedding": [[0.0], []]})
     )
     assert S.ann_topk_blocked(degenerate, k=1).count() == 0
+
+
+# ----------------------- two-table retrieval (cosine_topk_join_blocked)
+
+
+def test_cosine_topk_join_blocked_ties_and_zero_norm(spark):
+    """Duplicate vectors (rounded-cosine ties break on corpus id) and a
+    zero-norm row on each side (excluded), over a multi-batch corpus,
+    against the numpy brute force."""
+    rng = np.random.RandomState(11)
+    rows = [(i, [float(x) for x in rng.randn(6)]) for i in range(40)]
+    rows[7] = (7, rows[12][1])          # exact duplicate -> cosine tie
+    rows[3] = (3, [0.0] * 6)            # zero-norm corpus row
+    rows[30] = (30, [0.0] * 6)          # zero-norm query row
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    qs = df.where("vec_id % 5 = 0")
+    corpus = df.where("vec_id % 5 != 0").repartition(4)  # multi-batch
+
+    blocked = S.cosine_topk_join_blocked(qs, corpus, k=4)
+    assert blocked.columns == ["id_q", "id_c", "cosine", "rank"]
+    out = blocked.collect()
+    want = _numpy_join_topk(
+        [r for r in rows if r[0] % 5 == 0], [r for r in rows if r[0] % 5 != 0], k=4
+    )
+    _assert_join_matches_reference(out, want)
+    assert 30 not in {r.id_q for r in out} and 3 not in {r.id_c for r in out}
+
+
+def test_retrieval_guard_null_query_ids_dedicated_error(spark):
+    qs = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (None, [0.0, 1.0])],
+        "vec_id int, embedding array<double>",
+    )
+    corpus = spark.createDataFrame(
+        [(10, [1.0, 1.0])], "vec_id int, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="must be non-null"):
+        S.cosine_topk_join_blocked(qs, corpus, k=1)
+
+
+def test_retrieval_guard_duplicate_ids_still_distinct_error(spark):
+    qs = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (1, [0.0, 1.0])],
+        "vec_id int, embedding array<double>",
+    )
+    corpus = spark.createDataFrame(
+        [(10, [1.0, 1.0])], "vec_id int, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="must be distinct"):
+        S.cosine_topk_join_blocked(qs, corpus, k=1)
+
+
+def test_blocked_excludes_null_corpus_embeddings(spark):
+    rng = np.random.default_rng(7)
+    q_rows = [(i, rng.standard_normal(4).tolist()) for i in range(3)]
+    corpus_rows = [(100 + i, rng.standard_normal(4).tolist()) for i in range(8)]
+    corpus_rows.insert(3, (999, None))  # NULL embedding mid-table
+    qs = spark.createDataFrame(q_rows, "vec_id int, embedding array<double>")
+    corpus = spark.createDataFrame(
+        corpus_rows, "vec_id int, embedding array<double>"
+    )
+    out = S.cosine_topk_join_blocked(qs, corpus, k=3).collect()
+    _assert_join_matches_reference(out, _numpy_join_topk(q_rows, corpus_rows, k=3))
+    assert all(r.id_c != 999 for r in out)
+
+
+def test_round_half_away_matches_duckdb_not_bankers():
+    from topo_descriptors_spark.operators.similarity import _round_half_away
+
+    x = np.array([0.25, -0.25, 0.35, 2.5e-1, 0.125])
+    got = _round_half_away(x, 1)
+    # half-AWAY-from-zero: 0.25 -> 0.3 (np.round's half-to-even gives 0.2)
+    assert got[0] == pytest.approx(0.3)
+    assert got[1] == pytest.approx(-0.3)
+    assert np.round(x[0], 1) == pytest.approx(0.2)  # the old behavior
+    # non-boundary values unchanged vs np.round
+    assert _round_half_away(np.array([0.123456]), 3)[0] == pytest.approx(0.123)
+
+
+def test_blocked_kernel_inlined_rounding_is_half_away_end_to_end(spark):
+    """The mapInPandas score closure inlines its own copy of the
+    half-away-from-zero rounding (deliberately, to stay self-contained);
+    only the _round_half_away helper was unit-pinned, so the two copies
+    could silently diverge (ADVICE r6).  This routes an exact rounding
+    boundary through cosine_topk_join_blocked END-TO-END: a one-hot
+    query against an all-ones 16-dim corpus vector scores cosine
+    exactly 0.25 (binary-exact: 1/sqrt(16)*1), which at round_digits=1
+    is 0.3 under half-away-from-zero but 0.2 under numpy's half-to-even."""
+    from topo_descriptors_spark.operators.similarity import (
+        cosine_topk_join_blocked,
+    )
+
+    qs = spark.createDataFrame(
+        [(0, [1.0] + [0.0] * 15)], "vec_id int, embedding array<double>"
+    )
+    corpus = spark.createDataFrame(
+        [
+            (100, [1.0] * 16),    # cosine +0.25 -> 0.3 (half-even: 0.2)
+            (101, [-1.0] * 16),   # cosine -0.25 -> -0.3 (half-even: -0.2)
+            (102, [1.0] + [0.0] * 15),  # cosine 1.0, rank 1
+        ],
+        "vec_id int, embedding array<double>",
+    )
+    got = {
+        r.id_c: r.cosine
+        for r in cosine_topk_join_blocked(
+            qs, corpus, k=3, round_digits=1
+        ).collect()
+    }
+    assert got[100] == pytest.approx(0.3)   # NOT 0.2: half-away, both signs
+    assert got[101] == pytest.approx(-0.3)
+    assert got[102] == pytest.approx(1.0)
+
+
+def test_round_half_away_matches_duckdb_round_exactly():
+    """Cross-engine pin for the blocked kernel's rounding: DuckDB ROUND
+    (the oracle engine) agrees bit-for-bit on 20k seeded values incl.
+    near-boundary multiples of 2.5e-9 — the residual divergence risk is
+    only vs Spark's decimal-string HALF_UP, as documented."""
+    import duckdb
+
+    from topo_descriptors_spark.operators.similarity import _round_half_away
+
+    rng = np.random.default_rng(0)
+    x = np.concatenate([
+        rng.uniform(-1, 1, 20000),
+        np.array([0.25e-8 * k for k in range(-10, 11)]),
+    ])
+    con = duckdb.connect()
+    duck = con.execute(
+        "select round(v, 9) from (select unnest(?) v)", [x.tolist()]
+    ).fetchnumpy()
+    dv = next(iter(duck.values()))
+    assert np.abs(_round_half_away(x, 9) - dv).max() == 0.0

@@ -203,3 +203,50 @@ def test_state_partitions_pins_and_restores(spark):
         with state_partitions(spark, 5):
             raise RuntimeError("boom")
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+# ------------------------------ availableNow state-partition pinning
+
+
+def test_run_available_now_pins_state_partitions(spark, tmp_path):
+    import pandas as pd
+
+    from topo_descriptors_spark.streaming.sessions import (
+        run_available_now,
+        sessionize_stream,
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+    # epoch-micros longs sidestep parquet timestamp-annotation pitfalls
+    # (pandas writes ns INT64 that Spark refuses as timestamp[_ntz]);
+    # sentinel flush event in a later file: append-mode session output
+    # only emits sessions the watermark has passed (the standard drain
+    # trick, same as test_streaming.py)
+    base = 1704067200_000000  # 2024-01-01 00:00 UTC in micros
+    pd.DataFrame({
+        "user_id": [1, 1, 2],
+        "ts_us": [base, base + 600_000_000, base + 3_600_000_000],
+        "value": [1.0, 2.0, 3.0],
+    }).to_parquet(src / "a_part0.parquet")
+    pd.DataFrame({
+        "user_id": [9999],
+        "ts_us": [base + 90 * 86400_000_000],  # far future
+        "value": [0.0],
+    }).to_parquet(src / "b_flush.parquet")
+    ev = (spark.readStream.schema("user_id long, ts_us long, value double")
+          .option("maxFilesPerTrigger", 1)
+          .parquet(str(src))
+          .select("user_id", F.timestamp_micros("ts_us").alias("ts"), "value"))
+    sess = sessionize_stream(ev, gap_seconds=3600, watermark="1 hour")
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    run_available_now(sess, str(tmp_path / "out"), str(tmp_path / "ckp"),
+                      n_state_partitions=2)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    # the checkpoint records the pinned state partition count
+    import json as _json
+    meta = _json.loads((tmp_path / "ckp" / "offsets" / "0").read_text()
+                       .splitlines()[1])
+    assert meta["conf"]["spark.sql.shuffle.partitions"] == "2"
+    out = spark.read.parquet(str(tmp_path / "out")).where("user_id != 9999")
+    assert out.count() == 2  # two sessions (gap > 1h splits user 1 vs 2)

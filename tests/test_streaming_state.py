@@ -1,5 +1,5 @@
-"""Stateful streaming operator: state accumulates across micro-batches
-and the final per-entity state equals the batch aggregate."""
+"""Stateful streaming operator: state carries across micro-batches and
+every emitted row equals the batch operator's row."""
 
 import os
 import tempfile
@@ -9,73 +9,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import functions as F
-
-from topo_descriptors_spark.streaming.state import running_entity_state
-
-
-def test_running_state_across_batches(spark):
-    rng = np.random.RandomState(7)
-    t0 = pd.Timestamp("2024-01-01")
-
-    def batch(offset_h, n=40):
-        return pd.DataFrame(
-            {
-                "user_id": rng.randint(0, 6, n).astype(np.int64),
-                "ts": [
-                    t0 + pd.Timedelta(hours=offset_h, seconds=int(i) * 37)
-                    for i in range(n)
-                ],
-                "value": rng.rand(n) * 10,
-            }
-        )
-
-    b1, b2 = batch(0), batch(12)
-    with tempfile.TemporaryDirectory() as d:
-        src = f"{d}/src"
-        os.makedirs(src)
-        spark.createDataFrame(b1).coalesce(1).write.parquet(f"{src}/b1")
-        time.sleep(1.1)
-        spark.createDataFrame(b2).coalesce(1).write.parquet(f"{src}/b2")
-        schema = spark.read.parquet(f"{src}/b1").schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/*")
-        )
-        out = running_entity_state(stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("state_test")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = spark.sql("select * from state_test").toPandas()
-
-    # take each entity's LAST emitted update (the one with max n_events)
-    final = got.sort_values("n_events").groupby("entity").tail(1)
-    both = pd.concat([b1, b2])
-    expect = (
-        both.sort_values("ts")
-        .groupby("user_id")
-        .agg(
-            last_ts=("ts", "max"),
-            n_events=("value", "size"),
-            sum_value=("value", "sum"),
-        )
-        .reset_index()
-    )
-    merged = final.merge(expect, left_on="entity", right_on="user_id",
-                         suffixes=("", "_exp"))
-    assert len(merged) == len(expect)
-    assert (merged["n_events"] == merged["n_events_exp"]).all()
-    assert np.allclose(merged["sum_value"], merged["sum_value_exp"])
-    assert merged["last_ts"].equals(merged["last_ts_exp"])
-    # state genuinely accumulated across micro-batches: at least one
-    # entity was emitted twice (once per batch) with growing n_events
-    multi = got.groupby("entity").size()
-    assert (multi >= 2).any()
 
 
 def test_decayed_stream_equals_batch_operator(spark):

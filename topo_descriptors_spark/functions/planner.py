@@ -44,17 +44,6 @@ def grid_resolution(coords: np.ndarray) -> np.ndarray:
     return res
 
 
-def scales_to_frames(scales_m, resolution_m: float) -> list[int]:
-    """Convert scales in meters to odd pixel diameters for a grid with a
-    uniform resolution, then to window-frame half-widths.
-
-    Returns the odd diameters (the reference's ``scales_pxl``); callers
-    derive the frame half-width as ``k = d // 2`` →
-    ``Window.rowsBetween(-k, k)``.
-    """
-    return [int(d) for d in round_up_to_odd(np.asarray(scales_m, float) / resolution_m)]
-
-
 def frame_half_width(scale_pxl: int) -> int:
     """Odd pixel diameter → symmetric frame half-width k for rowsBetween(-k, k)."""
     return int(scale_pxl) // 2

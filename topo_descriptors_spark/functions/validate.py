@@ -91,6 +91,8 @@ def check_table(
 
     ``strict=True`` additionally rejects columns not in ``expected``
     (the 2-D-field-only analog of check_dem's dims check).
+
+    Public API: the reference's ``check_dem`` input contract.
     """
     fields = {f.name: f.dataType for f in df.schema.fields}
     problems = []

@@ -1,8 +1,10 @@
 """Similarity search over embedding columns (array<float>).
 
 Brute-force cosine top-k as the exactness baseline, and a deterministic
-random-hyperplane LSH variant as the scale path.  Dot products are pure
-JVM array folds (``zip_with`` + ``aggregate``) — no Python UDFs.
+random-hyperplane LSH variant as the scale path.  Brute-force and
+pair-threshold dot products are JVM array folds (``zip_with`` +
+``aggregate``); the top-k retrieval forms score with one BLAS matmul per
+Arrow batch (:func:`ann_topk_blocked`, :func:`cosine_topk_join_blocked`).
 
 Scale design: brute force is O(n²·d) — correct but only for oracle-sized
 inputs or per-bucket refinement.  At 10^9 vectors the LSH path buckets
@@ -178,58 +180,6 @@ def lsh_bucket_col(vec: str, planes: np.ndarray) -> Column:
     return bucket
 
 
-def ann_topk_lsh(
-    df: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec: str = "embedding",
-    n_planes: int = 8,
-    round_digits: int = 9,
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate top-k cosine neighbors: candidates restricted to the
-    same sign-pattern bucket, then exact cosine + ranking within bucket.
-
-    Recall is tested against :func:`cosine_topk` in pytest; raise
-    ``n_planes`` for bigger corpora (bucket size ~ n / 2^planes).
-
-    Pass ``dim`` (the embedding dimensionality, a schema-level fact) so
-    plan construction launches NO Spark job; the ``.first()`` fallback is
-    a convenience for exploratory use only."""
-    require_cols(df, "ann_topk_lsh", **{id_col: "atomic", vec: "array_numeric"})
-    if dim is None:
-        dim = len(df.select(vec).first()[0])
-    planes = hyperplanes(dim, n_planes)
-    # zero-norm vectors have no defined cosine (NaN, ranked above every
-    # number by Spark) — excluded from queries and candidates alike
-    withb = with_norm(df.select(id_col, vec), vec).where(
-        F.col("_norm") > 0
-    ).withColumn(
-        "_bucket", lsh_bucket_col(vec, planes)
-    )
-    a = withb.select(
-        F.col(id_col).alias("id_a"), F.col(vec).alias("va"),
-        F.col("_norm").alias("na"), F.col("_bucket").alias("ba"),
-    )
-    b = withb.select(
-        F.col(id_col).alias("id_b"), F.col(vec).alias("vb"),
-        F.col("_norm").alias("nb"), F.col("_bucket").alias("bb"),
-    )
-    pairs = a.join(b, (F.col("ba") == F.col("bb")) & (F.col("id_a") != F.col("id_b")))
-    cos = F.round(
-        dot_col("va", "vb") / (F.col("na") * F.col("nb")), round_digits
-    ).alias("cosine")
-    ranked = pairs.select("id_a", "id_b", cos).withColumn(
-        "rank",
-        F.row_number().over(
-            Window.partitionBy("id_a").orderBy(
-                F.col("cosine").desc(), F.col("id_b").asc()
-            )
-        ),
-    )
-    return ranked.where(F.col("rank") <= k)
-
-
 def ann_bucket_stats(
     df: DataFrame,
     vec: str = "embedding",
@@ -265,15 +215,18 @@ def ann_topk_blocked(
     dim: int | None = None,
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """Arrow-vectorized ANN: the production form of :func:`ann_topk_lsh`.
+    """Approximate top-k cosine neighbors: candidates restricted to the
+    same sign-pattern bucket (:func:`hyperplanes`), then exact cosine,
+    rounded to ``round_digits`` before ranking, ties broken on neighbor
+    id ascending.
 
-    Spark's array higher-order functions (zip_with/aggregate) are
-    interpreted per element — measured 3x slower than this path, which
-    (1) assigns LSH buckets with one numpy matmul per Arrow batch
-    (pandas_udf) and (2) computes the per-bucket cosine matrix + top-k
-    with one BLAS matmul per bucket (applyInPandas).  Identical results
-    to ann_topk_lsh (same planes, same round-before-rank, same
-    id-ascending tie-break).
+    Arrow-vectorized: (1) assigns LSH buckets with one numpy matmul per
+    Arrow batch (pandas_udf) and (2) computes the per-bucket cosine
+    matrix + top-k with one BLAS matmul per bucket (applyInPandas).
+    Spark's array higher-order functions (zip_with/aggregate) interpret
+    the same scoring per element and measured 3x slower.  Recall is
+    tested against :func:`cosine_topk`, exactness against a per-bucket
+    numpy reference; pass ``dim`` to keep plan construction job-free.
 
     Scale: bucket count ~2^n_planes bounds per-task matrices; for
     billion-vector corpora raise n_planes so bucket sizes stay ~10^3-10^4
@@ -300,14 +253,13 @@ def ann_topk_blocked(
 
     require_cols(df, "ann_topk_blocked", **{id_col: "atomic", vec: "array_numeric"})
     # zero-norm (and therefore empty-array) vectors have no defined
-    # cosine — excluded up front exactly like ann_topk_lsh/ivf_topk, so
-    # the twins stay result-identical and the BLAS kernels never see a
-    # zero-norm normalization or a raggedness-by-emptiness np.stack
-    # failure.  (NaN-element vectors pass this filter — Spark orders
-    # NaN above numbers — identically in both twins, so the twins still
-    # agree; a NaN cosine is then the caller's data problem, ADVICE
-    # r8.)  Non-empty wrong-dimension vectors still RAISE (guard, not
-    # truncate), the documented policy of cosine_topk_join_blocked.
+    # cosine — excluded up front exactly like cosine_topk/ivf_topk, so
+    # the BLAS kernels never see a zero-norm normalization or a
+    # raggedness-by-emptiness np.stack failure.  (NaN-element vectors
+    # pass this filter — Spark orders NaN above numbers; a NaN cosine
+    # is then the caller's data problem, ADVICE r8.)  Non-empty
+    # wrong-dimension vectors still RAISE (guard, not truncate), the
+    # documented policy of cosine_topk_join_blocked.
     df = df.where(norm_col(vec) > 0)
     if dim is None:  # schema-level fact; pass it to keep planning job-free
         first = df.select(vec).first()
@@ -635,12 +587,11 @@ def _check_retrieval_queries(
     id_col: str,
     vec: str,
     max_query_rows: int | None,
-    op: str,
 ) -> None:
-    """Shared entry guard for the two-table retrieval forms: schema,
-    bounded query side, and distinct query ids — all on ONE bounded
-    count job (with ``max_query_rows=None`` the caller vouches for
-    both)."""
+    """Entry guard for two-table retrieval: schema, bounded query side,
+    and distinct query ids — all on ONE bounded count job (with
+    ``max_query_rows=None`` the caller vouches for both)."""
+    op = "cosine_topk_join_blocked"
     require_cols(queries, f"{op}(queries)",
                  **{id_col: "atomic", vec: "array_numeric"})
     require_cols(corpus, f"{op}(corpus)",
@@ -675,7 +626,7 @@ def _check_retrieval_queries(
         )
 
 
-def cosine_topk_join(
+def cosine_topk_join_blocked(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
@@ -686,103 +637,41 @@ def cosine_topk_join(
 ) -> DataFrame:
     """Two-table exact retrieval: for every QUERY vector, the top-k
     cosine neighbors from a separate CORPUS table — the RAG /
-    seed-mining shape (cosine_topk is the self-join special case).
+    seed-mining shape (:func:`cosine_topk` is the self-join special
+    case).  Cosine is rounded to ``round_digits`` before ranking, ties
+    break on corpus id ascending, and NULL or zero-norm embeddings on
+    either side are excluded (cosine undefined).  Query ids must be
+    non-null and distinct (guard-raised on the same bounded count job
+    that enforces ``max_query_rows``; with ``max_query_rows=None`` the
+    caller vouches for both).  For corpus-sized QUERY sets use the
+    LSH/IVF paths instead (:func:`ann_topk_blocked`, :func:`ivf_topk`).
 
-    **At corpus scale use :func:`cosine_topk_join_blocked` instead.**
-    This base form ships ALL ``n_corpus x n_query`` scored triples into
-    the per-query ranking window — at 10^9+ corpus rows that shuffle IS
-    the job.  The blocked twin scores each Arrow batch with one BLAS
-    matmul and emits only exact per-batch top-k partials, bounding the
-    ranking shuffle at ``batches x n_query x k``; same semantics, same
-    oracle.  The base form is retained as the zero-Python, pure-Catalyst
-    exact reference path for small/medium corpora and for engines where
-    Arrow is unavailable.
-
-    Plan notes: the QUERY side is the broadcast side (bounded by
-    ``max_query_rows``, guard-and-raise per the engine convention),
-    scoring is map-side over corpus partitions (the corpus is scanned,
-    never shuffled), and only the narrow (query, corpus_id, cosine)
-    triples shuffle for the per-query ranking window.  For corpus-sized
-    QUERY sets use the LSH/IVF paths instead
-    (:func:`ann_topk_blocked`, :func:`ivf_topk`).
-
-    Query ids must be distinct (guard-raised on the same bounded count
-    job that enforces ``max_query_rows``; with ``max_query_rows=None``
-    the caller vouches for both); zero-norm vectors on either side are
-    excluded (cosine undefined); cosine is rounded before ranking, ties
-    break on corpus id ascending.
-    """
-    _check_retrieval_queries(queries, corpus, id_col, vec, max_query_rows,
-                             "cosine_topk_join")
-    q = with_norm(queries.select(id_col, vec), vec).where(F.col("_norm") > 0).select(
-        F.col(id_col).alias("id_q"), F.col(vec).alias("vq"),
-        F.col("_norm").alias("nq"),
-    )
-    c = with_norm(corpus.select(id_col, vec), vec).where(F.col("_norm") > 0).select(
-        F.col(id_col).alias("id_c"), F.col(vec).alias("vc"),
-        F.col("_norm").alias("nc"),
-    )
-    cos = F.round(
-        dot_col("vq", "vc") / (F.col("nq") * F.col("nc")), round_digits
-    ).alias("cosine")
-    scored = c.join(F.broadcast(q)).select("id_q", "id_c", cos)
-    ranked = scored.withColumn(
-        "rank",
-        F.row_number().over(
-            Window.partitionBy("id_q").orderBy(
-                F.col("cosine").desc(), F.col("id_c").asc()
-            )
-        ),
-    )
-    return ranked.where(F.col("rank") <= int(k))
-
-
-def cosine_topk_join_blocked(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec: str = "embedding",
-    round_digits: int = 9,
-    max_query_rows: int | None = 100_000,
-) -> DataFrame:
-    """Arrow/BLAS form of :func:`cosine_topk_join` — same semantics
-    (round-before-rank, id-ascending tie-break, null/zero-norm corpus
-    and query rows excluded; shares the driver-gate oracle), different
-    physics.  Results are identical up to 1e-``round_digits`` rounding
-    boundaries: the kernel rounds half-away-from-zero on the binary
-    double (matching DuckDB's ROUND), while Spark's ``F.round`` in the
-    base form applies decimal HALF_UP to the shortest decimal
-    representation — a value landing exactly on a rounding boundary
-    after the two forms' different summation orders can round one ulp
-    apart and swap an adjacent rank.  The driver gate compares at 6
+    Rounding: the kernel rounds half-away-from-zero on the binary double
+    (DuckDB's ROUND, pinned by :func:`_round_half_away`'s tests); Spark's
+    decimal HALF_UP ``F.round`` can differ by one ulp on a value landing
+    exactly on a rounding boundary.  The oracle comparison rounds to 6
     digits, which is the practical contract.
 
     * scoring is ONE numpy matmul per Arrow batch (``mapInPandas`` over
-      corpus partitions) instead of a per-element ``zip_with`` fold —
-      the interpreted higher-order-function path measured ~3x slower on
-      the ANN twin (:func:`ann_topk_blocked`), and dense d-dim scoring
-      is exactly the BLAS shape;
+      corpus partitions) — a per-element ``zip_with`` fold measured ~3x
+      slower on the ANN path, and dense d-dim scoring is exactly the
+      BLAS shape;
     * each batch emits only its PER-QUERY top-k partials (exact: a
       threshold at the k-th largest rounded cosine keeps every tie
       candidate, then lexsort with the id tie-break), so the final
       ranking window shuffles ``<= batches x n_query x k`` narrow rows
-      — the base form ships ``n_corpus x n_query`` triples to the same
-      window, which at 10^9+ corpus rows IS the job.  The corpus is
-      still scanned exactly once and never shuffled.
+      instead of ``n_corpus x n_query`` scored triples (at sf1.0 the
+      scoring join measured 464 s against 11 s for this form).  The
+      corpus is scanned exactly once and never shuffled.
 
     The (bounded) query side is collected driver-side and shipped in
-    the kernel closure — the broadcast-kernel pattern of SURVEY.md J3,
-    bounded by the same ``max_query_rows`` guard job as the base form.
-    NULL corpus embeddings are excluded exactly like the base form
-    (ADVICE r5); ragged or dimension-mismatched embeddings raise
-    (guard, not truncate; the zip_with base form would silently null
-    them).
+    the kernel closure — the broadcast-kernel pattern of SURVEY.md J3.
+    Ragged or dimension-mismatched embeddings raise (guard, not
+    truncate).
     """
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    _check_retrieval_queries(queries, corpus, id_col, vec, max_query_rows,
-                             "cosine_topk_join_blocked")
+    _check_retrieval_queries(queries, corpus, id_col, vec, max_query_rows)
     kk = int(k)
     rd = int(round_digits)
     # bounded collect (the guard above enforces the bound)
@@ -818,10 +707,9 @@ def cosine_topk_join_blocked(
         # only, no module-level helpers) — executors deserialize it
         # without the package on sys.path unless --py-files shipped it
         for pdf in batches:
-            # NULL corpus embeddings drop out silently, matching the
-            # base form's zero-norm/null exclusion (ADVICE r5) — an
-            # unmasked NULL would make np.stack raise a misleading
-            # "ragged lengths" error
+            # NULL corpus embeddings drop out silently like zero-norm
+            # ones (ADVICE r5) — an unmasked NULL would make np.stack
+            # raise a misleading "ragged lengths" error
             pdf = pdf[pdf[vec].notna()]
             if len(pdf) == 0:
                 continue

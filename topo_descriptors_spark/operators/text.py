@@ -38,24 +38,6 @@ def words_sql(text: str = "text") -> str:
     return f"filter(split({text}, '\\\\s+'), w -> w != '')"
 
 
-def shingles_sql(text: str = "text", n: int = 3) -> str:
-    """SQL for word n-gram shingles joined with single spaces.  Docs with
-    fewer than n words yield an empty array."""
-    w = words_sql(text)
-    parts = ", ".join(f"element_at({w}, i + {j + 1})" for j in range(n))
-    return (
-        f"case when size({w}) >= {n} then "
-        f"transform(sequence(0, size({w}) - {n}), i -> concat_ws(' ', {parts})) "
-        f"else array() end"
-    )
-
-
-def shingle_hashes_sql(text: str = "text", n: int = 3) -> str:
-    """SQL for the array of portable hashes of a doc's shingles."""
-    h = PORTABLE_HASH_SQL.format(col="s")
-    return f"transform({shingles_sql(text, n)}, s -> {h})"
-
-
 def words_col(text: str = "text") -> Column:
     return F.expr(words_sql(text))
 

@@ -302,16 +302,6 @@ def gradient(
     return df.select("*", dvdt.alias("dvdt"), slope.alias("slope_deg"))
 
 
-def sobel_cols(value: Column, w: WindowSpec) -> tuple[Column, Column]:
-    """1-D Sobel-path fallback for sigma<=1 (reference topo.py:658-685):
-    fixed ±1 stencil (v[i+1]-v[i-1])/2 with one-sided edges."""
-    v_next = F.coalesce(F.lead(value).over(w), value)
-    v_prev = F.coalesce(F.lag(value).over(w), value)
-    edge = F.lead(value).over(w).isNull() | F.lag(value).over(w).isNull()
-    d = F.when(edge, v_next - v_prev).otherwise((v_next - v_prev) / 2)
-    return d, F.degrees(F.atan(d))
-
-
 # ---------------------------------------------------------------------------
 # W7 — backfill / forward-fill / nearest fill (reference helpers.py:137-154
 # interpolate_na method="nearest", fill_value="extrapolate").
@@ -670,7 +660,9 @@ def reimpose_nulls(
     df: DataFrame, mask: str, feature_cols: list[str]
 ) -> DataFrame:
     """NULL out features where the original value was null — the carried
-    boolean-mask version of the reference's (row, col) NaN-index replay."""
+    boolean-mask version of the reference's (row, col) NaN-index replay.
+
+    Public API: the reference's NaN replay, applied after filling."""
     exprs = [
         F.when(F.col(mask), F.lit(None)).otherwise(F.col(c)).alias(c)
         if c in feature_cols

@@ -194,7 +194,9 @@ def run_partitioned(
 
 
 def read_run(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read the full output of a partitioned run."""
+    """Read the full output of a partitioned run.
+
+    Public API: the read side of the checkpointed runner."""
     return spark.read.option("basePath", out_dir).parquet(
         os.path.join(out_dir, "part=*")
     )

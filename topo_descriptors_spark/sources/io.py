@@ -30,9 +30,10 @@ TPCH_TABLES = (
 
 
 # metadata memo for the scan-parallelization decision: (total bytes,
-# row-group count) per parquet path.  Footer metadata only — never row
-# data — so this is a planning cache, not a result cache.
-_SCAN_META: dict[str, tuple[int, int]] = {}
+# row groups, rows) per (parquet path, path mtime_ns) — a rewrite at the
+# same path changes the mtime and misses the memo.  Footer metadata only
+# — never row data — so this is a planning cache, not a result cache.
+_SCAN_META: dict[tuple[str, int], tuple[int, int, int]] = {}
 
 
 def _parquet_meta(path: str, big_cutoff: int) -> tuple[int, int, int]:
@@ -47,8 +48,12 @@ def _parquet_meta(path: str, big_cutoff: int) -> tuple[int, int, int]:
     no data work)."""
     import os
 
-    if path in _SCAN_META:
-        return _SCAN_META[path]
+    try:
+        key = (path, os.stat(path).st_mtime_ns)
+    except OSError:
+        return (0, 0, 0)  # not a local path: no footer stats
+    if key in _SCAN_META:
+        return _SCAN_META[key]
     files = []
     if os.path.isdir(path):
         for root, _dirs, names in os.walk(path):
@@ -58,8 +63,8 @@ def _parquet_meta(path: str, big_cutoff: int) -> tuple[int, int, int]:
         files = [path]
     total = sum(os.path.getsize(f) for f in files)
     if total > big_cutoff:
-        _SCAN_META[path] = (total, 10**9, 0)
-        return _SCAN_META[path]
+        _SCAN_META[key] = (total, 10**9, 0)
+        return _SCAN_META[key]
     n_rg = 0
     n_rows = 0
     try:
@@ -72,8 +77,8 @@ def _parquet_meta(path: str, big_cutoff: int) -> tuple[int, int, int]:
     except Exception:
         # no pyarrow / unreadable footer: assume one split per file
         n_rg = len(files)
-    _SCAN_META[path] = (total, max(n_rg, 1) if files else 0, n_rows)
-    return _SCAN_META[path]
+    _SCAN_META[key] = (total, max(n_rg, 1) if files else 0, n_rows)
+    return _SCAN_META[key]
 
 
 def _size_bytes(spec: str) -> int:
@@ -114,9 +119,8 @@ def read_table(
     flow straight into a hash exchange (window/as-of/groupBy), where a
     prior round-robin exchange is pure cost (measured r9: events-window
     queries +0.3-1.5 s each, text/embedding queries 5-12x faster).
-    ``True`` skips the width check — for callers whose per-row
-    scan-stage work is heavy regardless of width (e.g. per-row md5 of a
-    thin key column).  ``False`` never repartitions.
+    ``False`` never repartitions, for callers whose heavy work runs
+    after their own exchange.
     """
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.format(fmt).load(path)
@@ -125,7 +129,7 @@ def read_table(
         target = spark.sparkContext.defaultParallelism
         big = target * _size_bytes(CFG.max_partition_bytes)
         total_bytes, n_rg, n_rows = _parquet_meta(path, big)
-        wide_enough = parallelize is True or (
+        wide_enough = (
             n_rows > 0
             and total_bytes / n_rows >= int(CFG.scan_repartition_min_row_bytes)
         )
@@ -147,10 +151,6 @@ def read_table(
                 and n_slices > n_rg):
             df = df.repartition(n_slices)
     return df
-
-
-def read_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: read_table(spark, sf_dir, t) for t in TPCH_TABLES}
 
 
 ZORDER_BITS = 12  # 4096 buckets per dimension — plenty for file-level stats
@@ -249,6 +249,8 @@ def scan_values(
 ) -> DataFrame:
     """Null out values at/below the floor (reference helpers.py:31).
 
+    Public API: the reference's min-elevation floor rule as a scan step.
+
     Expressed as a column rewrite (value -> NULL) rather than a row
     filter so positions survive for the null-mask replay; the predicate
     inside `when` still prunes parquet row groups via min/max stats when
@@ -269,6 +271,8 @@ def crop_with_halo(
     compute,
 ) -> DataFrame:
     """Compute-on-crop with correct boundary context.
+
+    Public API: the reference's crop rule (crop only after computing).
 
     Prunes the scan to [lo-halo, hi+halo] (partition/row-group pruning
     still applies — the predicate is a plain range filter), runs

@@ -1,8 +1,8 @@
-"""Deterministic synthetic fixtures (FIXTURES.md F2-F5).
+"""Deterministic synthetic fixtures (FIXTURES.md F3-F5).
 
 Everything is generated distributed — ``spark.range`` + column
 expressions, never a driver-side pandas materialization — so the same
-generators scale from the 64×64 test grid to bench-scale tables.
+generators scale from test fixtures to bench-scale tables.
 Determinism: all pseudo-randomness is hash-of-id based (xxhash64 of the
 row id and a seed literal), which is stable across partitionings,
 executors and Spark versions — no RNG state, no ordering dependence.
@@ -18,48 +18,6 @@ def _u01(col, seed: int):
     """Deterministic uniform [0,1) from any column: xxhash64 → positive → scale."""
     h = F.xxhash64(col, F.lit(seed))
     return (F.pmod(h, F.lit(1_000_000_007)).cast("double")) / 1_000_000_007.0
-
-
-def grid_2d(
-    spark: SparkSession,
-    ny: int = 64,
-    nx: int = 64,
-    null_frac: float = 0.02,
-    below_floor_frac: float = 0.005,
-    seed: int = 42,
-) -> DataFrame:
-    """F2 — DEM-like smooth terrain in long format.
-
-    ``(y int, x int, value float, is_orig_null boolean)``;
-    value = 100*sin(x/7)*cos(y/5) + 0.01*x*y, with ~null_frac cells null
-    and a few cells below the min_elevation floor (-100) to exercise the
-    scan filter (reference helpers.py:31).
-    """
-    df = (
-        spark.range(ny * nx)
-        .select(
-            (F.col("id") / nx).cast("int").alias("y"),
-            F.pmod(F.col("id"), F.lit(nx)).cast("int").alias("x"),
-            F.col("id"),
-        )
-        .withColumn(
-            "value",
-            (
-                F.lit(100.0) * F.sin(F.col("x") / 7.0) * F.cos(F.col("y") / 5.0)
-                + 0.01 * F.col("x") * F.col("y")
-            ).cast("float"),
-        )
-    )
-    u_null = _u01(F.col("id"), seed)
-    u_floor = _u01(F.col("id"), seed + 1)
-    df = df.withColumn(
-        "value",
-        F.when(u_floor < below_floor_frac, F.lit(-150.0)).otherwise(F.col("value")),
-    )
-    df = df.withColumn(
-        "value", F.when(u_null < null_frac, F.lit(None)).otherwise(F.col("value"))
-    )
-    return df.withColumn("is_orig_null", F.col("value").isNull()).drop("id")
 
 
 def documents_tok(
@@ -143,7 +101,9 @@ def asof_queries(
     spark: SparkSession, n_queries: int = 5000, n_entities: int = 200, seed: int = 42
 ) -> DataFrame:
     """F5 — point-in-time query side: ``(entity_id string, q_ts timestamp,
-    q_id long)``; q_ts lands before/between/after series timestamps."""
+    q_id long)``; q_ts lands before/between/after series timestamps.
+
+    Public API: fixture F5, the query side for :func:`series`."""
     df = spark.range(n_queries)
     eid = F.pmod(F.xxhash64("id", F.lit(seed + 7)), F.lit(n_entities))
     offset = _u01(F.col("id"), seed + 8) * 40000.0 - 2000.0  # some before t0

@@ -1,15 +1,10 @@
-"""Custom stateful streaming operator: running per-entity feature state.
+"""Custom stateful streaming operator: per-event decayed entity state.
 
-The streaming twin of the as-of join's state side: for every entity the
-operator maintains (last_ts, last_value, n_events, sum_value) across
+:func:`decayed_entity_state` keeps each entity's trailing window across
 micro-batches with ``applyInPandasWithState`` — an Arrow-batched,
 explicitly-stated operator (the "custom stateful operator" slot of the
 engine; per-row Python never touches the JVM boundary, each group's
 batch is one pandas frame).
-
-Every micro-batch emits the UPDATED state of the entities it touched —
-exactly what a downstream point-in-time consumer needs to refresh its
-state table incrementally.
 """
 
 from __future__ import annotations
@@ -20,81 +15,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-STATE_SCHEMA = StructType(
-    [
-        StructField("last_ts", TimestampType()),
-        StructField("last_value", DoubleType()),
-        StructField("n_events", LongType()),
-        StructField("sum_value", DoubleType()),
-    ]
-)
-
-
-def _output_schema(entity_type) -> StructType:
-    return StructType(
-        [
-            StructField("entity", entity_type),
-            StructField("last_ts", TimestampType()),
-            StructField("last_value", DoubleType()),
-            StructField("n_events", LongType()),
-            StructField("sum_value", DoubleType()),
-        ]
-    )
-
-
-def running_entity_state(
-    stream: DataFrame,
-    entity: str = "user_id",
-    ts: str = "ts",
-    value: str = "value",
-) -> DataFrame:
-    """Maintain (last_ts, last_value, n_events, sum_value) per entity."""
-    entity_type = stream.schema[entity].dataType
-    out_schema = _output_schema(entity_type)
-
-    def update(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            last_ts, last_value, n, s = state.get
-        else:
-            last_ts, last_value, n, s = None, None, 0, 0.0
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts)
-            n += len(pdf)
-            s += float(pdf[value].fillna(0.0).sum())
-            tail = pdf.iloc[-1]
-            if last_ts is None or tail[ts] >= last_ts:
-                last_ts = tail[ts]
-                v = tail[value]
-                last_value = None if pd.isna(v) else float(v)
-        state.update((last_ts, last_value, n, s))
-        yield pd.DataFrame(
-            {
-                "entity": [key[0]],
-                "last_ts": [last_ts],
-                "last_value": [last_value],
-                "n_events": [n],
-                "sum_value": [s],
-            }
-        )
-
-    return stream.groupBy(entity).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 
 def decayed_entity_state(
