@@ -23,7 +23,7 @@ from topo_descriptors_spark.operators import window as W
 from topo_descriptors_spark.operators.asof import asof_join, asof_join_bucketed
 from topo_descriptors_spark.operators.dedup import minhash_params
 from topo_descriptors_spark.operators.text import HASH_PRIME
-from topo_descriptors_spark.sources.io import read_table
+from topo_descriptors_spark.sources.io import read_table, state_partitions_for
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -63,9 +63,10 @@ def _drain_to_memory(spark, sdf, prefix, mode, n_state=None):
     call — the driver/bench/selfcheck loops are serial, so by then it
     has been materialized; holding results from two invocations of the
     SAME gate row concurrently is not a supported pattern.  Stateful
-    drains pass ``n_state``: state partitions sized to gate-scale state
-    volume, not the session's batch shuffle default (see
-    streaming.sessions.state_partitions — 10-20x measured at sf0.1).
+    drains pass ``n_state`` from ``sources.io.state_partitions_for``:
+    state partitions sized to the events input, not the session's batch
+    shuffle default (see streaming.sessions.state_partitions — 10-20x
+    measured at sf0.1).
     """
     import shutil
     import tempfile
@@ -97,32 +98,19 @@ def _drain_to_memory(spark, sdf, prefix, mode, n_state=None):
     return spark.table(name)
 
 
-def _gate_state_partitions(spark, sf_dir, light_state: bool = False) -> int:
-    """State-partition count for the stateful gate drains, sized to the
-    events input (r9 A/B, interleaved medians): at gate scale the fixed
-    per-partition state-store commit cost dominates and 8 partitions is
-    best (sf0.1: 4.41s total @8 vs 6.22s @32 across the four stateful
-    drains — consistent with the r6 512->8 measurement), while at
-    sf1.0+ the per-event state kernel dominates and wants full core
-    fan-out (w_decayed_stream 9.25s @8 -> 4.69s @32).
-
-    ``light_state``: drains whose per-event state work is O(1) and tiny
-    (dropDuplicates' key-set insert) never amortize the commit cost at
-    these input sizes — the dedup drain measured 2.37s @32 vs 1.41s @8
-    on the 10x corpus (r9 interleaved A/B) while the kernel-heavy
-    drains all preferred @32 there — so the fan-out threshold is 16x
-    higher for them.  Cluster-safe: scales with defaultParallelism,
-    never a hard-coded core count."""
-    import os as _os
-
-    fan_out = max(8, spark.sparkContext.defaultParallelism)
-    try:
-        mb = _os.path.getsize(_os.path.join(sf_dir, "events.parquet")) / 2**20
-    except OSError:
-        return fan_out  # unknown size (e.g. non-local path): fail open
-    if mb < (128.0 if light_state else 8.0):
-        return 8
-    return fan_out
+def _events_stream(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """The events table as a file STREAM, projected to ``cols`` with
+    ``ts`` cast to TIMESTAMP (watermarks and session windows need it).
+    The file stream source requires a DIRECTORY; the testdata tables
+    are single files, so this streams the sf dir with a glob filter."""
+    sdf = (
+        spark.readStream.schema(_events(spark, sf_dir).schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
+    return sdf.select(
+        *[F.col(c).cast("timestamp").alias(c) if c == "ts" else c for c in cols]
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -869,22 +857,11 @@ def q_sessionize_stream(spark, sf_dir):
     """
     from topo_descriptors_spark.streaming.sessions import sessionize_stream
 
-    schema = _events(spark, sf_dir).schema
-    # the file stream source requires a DIRECTORY; the testdata tables
-    # are single files, so stream the sf dir with a glob filter
-    ev = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select(
-            "user_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            "value",
-        )
-    )
+    ev = _events_stream(spark, sf_dir, "user_id", "ts", "value")
     sess = sessionize_stream(ev, gap_seconds=21600, watermark="87600 hours")
     return _drain_to_memory(
-        spark, sess, "sess_gate", "complete", n_state=_gate_state_partitions(spark, sf_dir)
+        spark, sess, "sess_gate", "complete",
+        n_state=state_partitions_for(spark, f"{sf_dir}/events.parquet"),
     ).select(
         "user_id",
         F.unix_micros("session_start").alias("start_us"),
@@ -912,24 +889,15 @@ def q_dedup_stream(spark, sf_dir):
     """
     from topo_descriptors_spark.streaming.sessions import dedup_stream
 
-    schema = _events(spark, sf_dir).schema
-    ev = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select(
-            "user_id",
-            "event_type",
-            F.col("ts").cast("timestamp").alias("ts"),
-        )
-    )
+    ev = _events_stream(spark, sf_dir, "user_id", "event_type", "ts")
     deduped = dedup_stream(
         ev, id_cols=("user_id", "event_type"), ts="ts",
         watermark="87600 hours",
     )
     return _drain_to_memory(
         spark, deduped, "dedup_gate", "append",
-        n_state=_gate_state_partitions(spark, sf_dir, light_state=True),
+        n_state=state_partitions_for(
+            spark, f"{sf_dir}/events.parquet", light_state=True),
     ).select("user_id", "event_type")
 
 
@@ -948,23 +916,13 @@ def q_decayed_stream(spark, sf_dir):
     """
     from topo_descriptors_spark.streaming.state import decayed_entity_state
 
-    schema = _events(spark, sf_dir).schema
-    ev = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select(
-            "event_id",
-            "user_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            "value",
-        )
-    )
+    ev = _events_stream(spark, sf_dir, "event_id", "user_id", "ts", "value")
     out = decayed_entity_state(
         ev, half_life_seconds=86400.0, lookback_rows=50
     )
     return _drain_to_memory(
-        spark, out, "decay_gate", "append", n_state=_gate_state_partitions(spark, sf_dir)
+        spark, out, "decay_gate", "append",
+        n_state=state_partitions_for(spark, f"{sf_dir}/events.parquet"),
     ).select(
         F.col("id").alias("event_id"),
         F.col("entity").alias("user_id"),
@@ -1646,18 +1604,11 @@ def q_window_counts_stream(spark, sf_dir):
     windows make the batch oracle an exact floor-division bucketing."""
     from topo_descriptors_spark.streaming.sessions import windowed_counts_stream
 
-    schema = _events(spark, sf_dir).schema
-    ev = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select(
-            "user_id", F.col("ts").cast("timestamp").alias("ts"), "value"
-        )
-    )
+    ev = _events_stream(spark, sf_dir, "user_id", "ts", "value")
     agg = windowed_counts_stream(ev, 86400, watermark="87600 hours")
     return _drain_to_memory(
-        spark, agg, "winc_gate", "complete", n_state=_gate_state_partitions(spark, sf_dir)
+        spark, agg, "winc_gate", "complete",
+        n_state=state_partitions_for(spark, f"{sf_dir}/events.parquet"),
     ).select(
         "user_id",
         F.unix_micros("window_start").alias("start_us"),
@@ -1785,17 +1736,10 @@ def q_enrich_stream(spark, sf_dir):
     regardless of micro-batch slicing, no watermark tricks needed)."""
     from topo_descriptors_spark.streaming.sessions import enrich_stream
 
-    ev_batch = _events(spark, sf_dir)
-    dim = ev_batch.groupBy("user_id").agg(
+    dim = _events(spark, sf_dir).groupBy("user_id").agg(
         F.count(F.lit(1)).alias("user_n_events")
     )
-    schema = ev_batch.schema
-    ev = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select("event_id", "user_id")
-    )
+    ev = _events_stream(spark, sf_dir, "event_id", "user_id")
     out = enrich_stream(ev, dim, on="user_id")
     return _drain_to_memory(spark, out, "enr_gate", "append").select(
         "event_id", "user_id", F.col("user_n_events").cast("long").alias("user_n_events")

@@ -1,5 +1,6 @@
 """Every top-level package function or class has a caller outside
 ``tests/`` — or an allowlist entry here that says why it is public API.
+Every ``EngineConfig`` field is read as ``CFG.<field>`` outside ``tests/``.
 
 A reference counts when the name appears as an identifier (a name, an
 attribute or an import) in any Python file of the repository outside a
@@ -9,6 +10,7 @@ attribute or an import) in any Python file of the repository outside a
 from __future__ import annotations
 
 import ast
+import dataclasses
 import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -25,10 +27,12 @@ ALLOWLIST = {
     "functions.validate.check_table": "the reference's check_dem",
     "functions.planner.get_sigmas": "the reference's get_sigmas",
     "functions.planner.scale_to_pixel": "the reference's scale_to_pixel",
-    "functions.kernels.tpi_grid": "numpy port of the reference TPI grid",
+    "functions.kernels.tpi_grid": "numpy reference the TPI tile kernel is tested against",
     "functions.kernels.std_grid": "numpy reference the STD tile kernel is tested against",
     "functions.kernels.gradient_grid": "numpy reference the gradient tile kernel is tested against",
-    "functions.kernels.valley_ridge_grid": "numpy port of the reference valley/ridge grid",
+    "functions.kernels.valley_ridge_grid": (
+        "numpy reference the valley/ridge tile kernel is tested against"
+    ),
     "sources.io.scan_values": "the reference's min-elevation floor rule",
     "sources.io.crop_with_halo": "the reference's crop rule",
     "sources.synthetic.series": "fixture F4",
@@ -39,7 +43,6 @@ ALLOWLIST = {
     "operators.window.reimpose_nulls": "the reference's NaN replay",
     "operators.bloom.bloom_fp_rate": "sizing aid for the Bloom filter",
     "operators.dedup.exact_dedup": "exact-content dedup operator",
-    "operators.dedup.lsh_bucket_stats": "skew inspection for the LSH dedup cap",
     "operators.multimodal.decode_stub": "decoder plug-in point",
     "operators.similarity.ann_bucket_stats": "skew inspection for ann_topk_blocked",
     "operators.similarity.dequantize_embeddings": "inverse of quantize_embeddings",
@@ -98,3 +101,19 @@ def test_every_package_definition_has_a_caller_or_a_reason():
     )
     stale = sorted(set(ALLOWLIST) - unreferenced)
     assert not stale, f"allowlist entries now called or gone: {stale}"
+
+
+def test_every_config_field_is_read():
+    from topo_descriptors_spark.config import EngineConfig
+
+    read = set()
+    for path in _py_files(REPO):
+        for node in ast.walk(ast.parse(open(path).read())):
+            if (isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "CFG"):
+                read.add(node.attr)
+    unread = sorted(
+        f.name for f in dataclasses.fields(EngineConfig) if f.name not in read
+    )
+    assert not unread, f"EngineConfig fields never read as CFG.<field>: {unread}"

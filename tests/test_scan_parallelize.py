@@ -14,13 +14,12 @@ import os
 
 import pandas as pd
 
-from topo_descriptors_spark.config import CFG
 from topo_descriptors_spark.sources import io as tio
 
 
 def _write_single_rowgroup(spark, path: str, n_rows: int) -> None:
     # incompressible payload so the on-disk size clears the
-    # scan_repartition_min_bytes floor at realistic row counts
+    # SCAN_REPARTITION_MIN_BYTES floor at realistic row counts
     import numpy as np
 
     rng = np.random.default_rng(42)
@@ -39,8 +38,8 @@ def test_small_single_rowgroup_input_is_repartitioned(spark, tmp_path):
     target = spark.sparkContext.defaultParallelism
     # slice count = factor x cores, capped by the per-slice row floor
     expected = min(
-        CFG.scan_repartition_factor * target,
-        20_000 // CFG.scan_repartition_min_rows_per_slice,
+        tio.SCAN_REPARTITION_FACTOR * target,
+        20_000 // tio.SCAN_REPARTITION_MIN_ROWS_PER_SLICE,
     )
     assert df.rdd.getNumPartitions() == expected
     # same rows, only layout changed
@@ -55,7 +54,7 @@ def test_tiny_dim_is_left_alone(spark, tmp_path):
     _write_single_rowgroup(spark, os.path.join(base, "dim.parquet"), 10)
     tio._SCAN_META.clear()
     df = tio.read_table(spark, base, "dim")
-    # below scan_repartition_min_bytes: no exchange added
+    # below SCAN_REPARTITION_MIN_BYTES: no exchange added
     assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -68,19 +67,18 @@ def test_row_floor_skips_small_tables(spark, tmp_path):
     tio._SCAN_META.clear()
     total, _rg, n_rows = tio._parquet_meta(
         os.path.join(base, "t.parquet"), big_cutoff=10**12)
-    assert total >= CFG.scan_repartition_min_bytes  # byte floor cleared
-    assert (n_rows // CFG.scan_repartition_min_rows_per_slice
-            < CFG.scan_repartition_min_slices)
+    assert total >= tio.SCAN_REPARTITION_MIN_BYTES  # byte floor cleared
+    assert (n_rows // tio.SCAN_REPARTITION_MIN_ROWS_PER_SLICE
+            < tio.SCAN_REPARTITION_MIN_SLICES)
     df = tio.read_table(spark, base, "t")
     assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_factor_zero_disables(spark, tmp_path, monkeypatch):
+def test_parallelize_false_disables(spark, tmp_path):
     base = str(tmp_path)
     _write_single_rowgroup(spark, os.path.join(base, "t.parquet"), 20_000)
     tio._SCAN_META.clear()
-    monkeypatch.setattr(CFG, "scan_repartition_factor", 0)
-    df = tio.read_table(spark, base, "t")
+    df = tio.read_table(spark, base, "t", parallelize=False)
     assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
     tio._SCAN_META.clear()
 
@@ -114,31 +112,49 @@ def test_footer_memo_tracks_rewrites(tmp_path):
     tio._SCAN_META.clear()
 
 
-def test_gate_state_partitions_scale_with_input(spark, monkeypatch):
-    import __spark_entry__ as entry
+def _sparse_file(path, mib: int) -> str:
+    """A ``mib``-MiB file that uses no disk: its apparent size is what
+    the stat walk sums, and its all-zero footer fails the footer read."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "wb") as f:
+        f.truncate(mib * 2**20)
+    return str(path)
 
-    monkeypatch.setattr(os.path, "getsize", lambda p: 2 * 2**20)
-    assert entry._gate_state_partitions(spark, "/x") == 8
-    monkeypatch.setattr(os.path, "getsize", lambda p: 16 * 2**20)
-    assert entry._gate_state_partitions(spark, "/x") == max(
+
+def test_gate_state_partitions_scale_with_input(spark, tmp_path):
+    small = _sparse_file(tmp_path / "s" / "events.parquet", 2)
+    mid = _sparse_file(tmp_path / "m" / "events.parquet", 16)
+    big = _sparse_file(tmp_path / "b" / "events.parquet", 256)
+    assert tio.state_partitions_for(spark, small) == 8
+    assert tio.state_partitions_for(spark, mid) == max(
         8, spark.sparkContext.defaultParallelism
     )
     # light-state drains (O(1) per-event state work) keep the low
     # partition count until the input is 16x larger
-    assert entry._gate_state_partitions(spark, "/x", light_state=True) == 8
-    monkeypatch.setattr(os.path, "getsize", lambda p: 256 * 2**20)
-    assert entry._gate_state_partitions(spark, "/x", light_state=True) == max(
+    assert tio.state_partitions_for(spark, mid, light_state=True) == 8
+    assert tio.state_partitions_for(spark, big, light_state=True) == max(
         8, spark.sparkContext.defaultParallelism
     )
 
-    # unknown size (getsize raises, e.g. a non-local path) fails open;
-    # a 64-slot context tells fan-out apart from the 8-partition floor
+    # unknown size (the path cannot be stat-ed, e.g. a non-local path)
+    # fails open; a 64-slot context tells fan-out apart from the
+    # 8-partition floor
     from types import SimpleNamespace
 
-    def boom(p):
-        raise OSError("no such file")
-
-    monkeypatch.setattr(os.path, "getsize", boom)
     wide = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=64))
+    missing = str(tmp_path / "missing" / "events.parquet")
     for light in (False, True):
-        assert entry._gate_state_partitions(wide, "/x", light_state=light) == 64
+        assert tio.state_partitions_for(wide, missing, light_state=light) == 64
+    tio._SCAN_META.clear()
+
+
+def test_gate_state_partitions_directory_table(tmp_path):
+    """A directory-shaped table is sized by the parquet files inside it,
+    not by the directory entry's own few-KiB stat size."""
+    from types import SimpleNamespace
+
+    table = tmp_path / "events.parquet"
+    _sparse_file(table / "part-0.parquet", 16)
+    wide = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=64))
+    assert tio.state_partitions_for(wide, str(table)) == 64
+    tio._SCAN_META.clear()

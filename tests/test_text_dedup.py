@@ -1,5 +1,8 @@
 """Text-analysis + dedup operators: correctness on crafted corpora."""
 
+import hashlib
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -7,6 +10,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from topo_descriptors_spark.operators import dedup, text
+from topo_descriptors_spark.operators.dedup import token_prefix_groups
+from topo_descriptors_spark.operators.text import (
+    bm25_score,
+    gopher_rules,
+    token_bigram_topk,
+)
 
 
 @pytest.fixture(scope="module")
@@ -771,3 +780,198 @@ def test_fuzzy_ed1_max_df_caps_megacluster(spark):
     # the 50-row identical cluster is capped out (would be 1225 pairs);
     # the small pair survives
     assert got == [(100, 101)]
+
+
+# ------------ BM25, Gopher rules, token bigrams, token-prefix dedup, script
+# ------------ profile, dataset card (hash-dependent ops are replayed with a
+# ------------ Python re-implementation of the portable hash)
+
+
+def _ptok(word: str, vocab: int = 4096) -> int:
+    """Python replay of text.tokens_sql's portable hash token."""
+    return int(hashlib.md5(word.lower().encode()).hexdigest()[:15], 16) % vocab
+
+
+def _plan_of(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture(scope="module")
+def tiny_docs(spark):
+    rows = [
+        (1, "data model data pipeline"),
+        (2, "the model is a model"),
+        (3, "nothing relevant here at all"),
+        (4, ""),
+    ]
+    return spark.createDataFrame(rows, "doc_id int, text string")
+
+
+def _bm25_ref(docs, terms, k1=1.2, b=0.75):
+    words = {i: t.lower().split() for i, t in docs}
+    n = len(words)
+    avgdl = sum(len(w) for w in words.values()) / n
+    out = {}
+    for i, w in words.items():
+        s = 0.0
+        for t in terms:
+            tf = w.count(t)
+            df = sum(1 for ww in words.values() if t in ww)
+            idf = math.log(1 + (n - df + 0.5) / (df + 0.5))
+            s += idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * len(w) / avgdl))
+        out[i] = round(s, 6)
+    return out
+
+
+def test_bm25_matches_reference(spark, tiny_docs):
+    rows = [(1, "data model data pipeline"), (2, "the model is a model"),
+            (3, "nothing relevant here at all"), (4, "")]
+    ref = _bm25_ref(rows, ["data", "model"])
+    got = {
+        r.doc_id: r.bm25
+        for r in bm25_score(tiny_docs, ["data", "model"]).collect()
+    }
+    for i in ref:
+        assert got[i] == pytest.approx(ref[i], abs=1e-6), i
+    assert got[4] == 0.0  # empty doc scores zero, not NaN
+
+
+def test_bm25_validates_terms(tiny_docs):
+    with pytest.raises(ValueError):
+        bm25_score(tiny_docs, [])
+    with pytest.raises(ValueError):
+        bm25_score(tiny_docs, ["a", "A"])  # dup after lowercasing
+
+
+def test_gopher_flags(spark):
+    good = " ".join(["alpha beta gamma delta epsil"] * 12)  # 60 words, len 5
+    short = "too short"
+    bullets = "\n".join(f"- item {i} ok" for i in range(10))
+    rows = [(1, good), (2, short), (3, bullets), (4, "")]
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    out = {r.doc_id: r for r in gopher_rules(df).collect()}
+    assert out[1].gopher_pass
+    assert not out[2].ok_word_count and not out[2].gopher_pass
+    assert out[3].bullet_frac == 1.0 and not out[3].ok_bullet_lines
+    assert out[4].n_words == 0 and not out[4].gopher_pass
+    # empty doc: line rules vacuously true, word rules reject
+    assert out[4].ok_bullet_lines and out[4].ok_ellipsis_lines
+
+
+def test_gopher_ellipsis(spark):
+    text = "one line fine\nsecond line trails off...\nthird ends too…"
+    df = spark.createDataFrame([(1, text)], "doc_id int, text string")
+    r = gopher_rules(df).collect()[0]
+    assert r.ellipsis_frac == pytest.approx(2 / 3, abs=1e-6)
+    assert not r.ok_ellipsis_lines
+
+
+def test_token_bigram_counts(spark):
+    # "a b" appears 3x across docs, "b c" 2x, "c a" 1x
+    rows = [(1, "a b c a b"), (2, "a b c")]
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    out = token_bigram_topk(df, k=10).collect()
+    counts = {(r.tok_a, r.tok_b): r.n for r in out}
+    ta, tb, tc = _ptok("a"), _ptok("b"), _ptok("c")
+    assert counts[(ta, tb)] == 3
+    assert counts[(tb, tc)] == 2
+    assert counts[(tc, ta)] == 1
+    # top-1 is the most frequent bigram
+    assert (out[0].tok_a, out[0].tok_b, out[0].n) == (ta, tb, 3)
+
+
+def test_token_bigram_short_docs_skipped(spark):
+    df = spark.createDataFrame([(1, "solo"), (2, "")], "doc_id int, text string")
+    assert token_bigram_topk(df).count() == 0
+
+
+def test_token_prefix_groups(spark):
+    shared = "breaking news about the market"
+    rows = [
+        (1, shared + " with extra tail one"),
+        (2, shared + " and a different continuation"),
+        (3, "completely different document body"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    out = token_prefix_groups(df, prefix_len=5).collect()
+    by_gid = {r.group_id: r for r in out}
+    assert by_gid[1].n_docs == 2 and by_gid[1].is_dup  # docs 1+2 share prefix
+    assert by_gid[3].n_docs == 1 and not by_gid[3].is_dup
+
+
+def test_token_prefix_shorter_than_prefix_len(spark):
+    # docs shorter than prefix_len group on their full token array
+    rows = [(1, "tiny doc"), (2, "tiny doc"), (3, "tiny")]
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    out = {r.group_id: r.n_docs for r in token_prefix_groups(df, prefix_len=8).collect()}
+    assert out == {1: 2, 3: 1}
+
+
+def test_bm25_plan_never_shuffles_corpus(spark, tiny_docs):
+    """BM25's only data movement is the one-row stats broadcast: the
+    corpus side must not hash-partition at all."""
+    plan = _plan_of(bm25_score(tiny_docs, ["data", "model"]))
+    assert plan.count("Exchange hashpartitioning") == 0
+    assert "BroadcastExchange" in plan or "BroadcastNestedLoopJoin" in plan
+
+
+def test_token_bigrams_single_shuffle_and_topk(spark):
+    from topo_descriptors_spark.operators.text import token_bigram_topk
+
+    df = spark.createDataFrame([(1, "a b c a b")], "doc_id int, text string")
+    plan = _plan_of(token_bigram_topk(df, k=10))
+    # one groupBy shuffle; the final top-k is TakeOrdered, never a sort
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "TakeOrderedAndProject" in plan
+
+
+def test_gopher_rules_map_only(spark, tiny_docs):
+    plan = _plan_of(gopher_rules(tiny_docs))
+    assert "Exchange" not in plan  # pure in-row expressions
+
+
+def test_script_profile_detects_scripts(spark):
+    from topo_descriptors_spark.operators.text import script_profile
+
+    rows = [
+        (1, "hello plain english text"),
+        (2, "Привет мир Привет"),
+        (3, "漢字テキストです"),
+        (4, "mixed Привет hello"),
+        (5, "12345 !!! ..."),
+    ]
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    out = {r.doc_id: r for r in script_profile(df).collect()}
+    assert out[1].dominant_script == "latin" and out[1].latin_frac == 1.0
+    assert out[2].dominant_script == "cyrillic"
+    assert out[3].dominant_script == "cjk"
+    assert out[4].dominant_script in ("latin", "cyrillic")
+    assert out[4].latin_frac > 0 and out[4].cyrillic_frac > 0
+    assert out[5].dominant_script == "und"  # no script chars at all
+    assert out[5].latin_frac is None
+
+
+def test_script_profile_map_only(spark):
+    from topo_descriptors_spark.operators.text import script_profile
+
+    df = spark.createDataFrame([(1, "x")], "doc_id int, text string")
+    plan = script_profile(df)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+
+
+def test_dataset_card_numbers(spark):
+    from topo_descriptors_spark.operators.text import dataset_card
+
+    rows = [
+        (1, "one two three", "web"),
+        (2, "one two three", "web"),   # exact dup of 1
+        (3, "four five", "books"),
+        (4, "", "web"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id int, text string, source string")
+    r = dataset_card(df).collect()[0]
+    assert r.n_docs == 4
+    assert r.total_words == 8
+    assert r.empty_frac == 0.25
+    assert r.dup_frac == 0.25  # 3 distinct contents over 4 docs
+    assert r.n_sources == 2

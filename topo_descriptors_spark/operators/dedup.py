@@ -122,8 +122,8 @@ def lsh_candidate_pairs(
     sig_len: int | None = None,
 ) -> DataFrame:
     """Distinct candidate pairs (id_a < id_b) sharing at least one LSH
-    band.  Buckets larger than ``max_bucket`` docs are dropped (reported
-    by the caller via ``lsh_bucket_stats``) to bound the self-join."""
+    band.  Buckets larger than ``max_bucket`` docs are dropped to bound
+    the per-bucket pair generation."""
     n = sig_len if sig_len is not None else df.select(F.size(sig)).first()[0]
     rows_per_band = n // bands
     band_cols = [
@@ -161,26 +161,6 @@ def lsh_candidate_pairs(
         .select(F.col("_p.id_a").alias("id_a"), F.col("_p.id_b").alias("id_b"))
         .distinct()
     )
-
-
-def lsh_bucket_stats(
-    df: DataFrame, id_col: str = "doc_id", sig: str = "minhash", bands: int = 4,
-    sig_len: int | None = None,
-) -> DataFrame:
-    """Bucket-size distribution for skew inspection / cap reporting."""
-    n = sig_len if sig_len is not None else df.select(F.size(sig)).first()[0]
-    rows_per_band = n // bands
-    band_cols = [
-        F.concat_ws(
-            "_",
-            *[F.col(sig)[i] for i in range(b * rows_per_band, (b + 1) * rows_per_band)],
-        )
-        for b in range(bands)
-    ]
-    banded = df.select(
-        F.posexplode(F.array(*band_cols)).alias("band_id", "band_key")
-    )
-    return banded.groupBy("band_id", "band_key").count()
 
 
 def minhash_dedup_pairs(

@@ -187,12 +187,12 @@ def ann_bucket_stats(
     seed: int = 7,
     dim: int | None = None,
 ) -> DataFrame:
-    """Sign-pattern bucket-size distribution for the ANN paths — the
-    skew-inspection twin of :func:`dedup.lsh_bucket_stats`.  Highly
-    correlated embeddings (common after dedup or on single-domain
-    corpora) collapse into few sign patterns; inspect this before
-    choosing ``n_planes``/``max_bucket`` for :func:`ann_topk_blocked`.
-    Returns one row per occupied bucket: (bucket, count)."""
+    """Sign-pattern bucket-size distribution for the ANN paths, for
+    skew inspection.  Highly correlated embeddings (common after dedup
+    or on single-domain corpora) collapse into few sign patterns;
+    inspect this before choosing ``n_planes``/``max_bucket`` for
+    :func:`ann_topk_blocked`.  Returns one row per occupied bucket:
+    (bucket, count)."""
     require_cols(df, "ann_bucket_stats", **{vec: "array_numeric"})
     if dim is None:
         dim = len(df.select(vec).first()[0])

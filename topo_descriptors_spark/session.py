@@ -12,13 +12,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-from topo_descriptors_spark.config import CFG
+from topo_descriptors_spark.sources.io import MAX_PARTITION_BYTES
 
 
 def get_spark(
     app_name: str = "topo-descriptors-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
     extra: dict | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
@@ -30,8 +30,6 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = CFG.shuffle_partitions
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -45,14 +43,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.files.maxPartitionBytes", CFG.max_partition_bytes)
+        .config("spark.sql.files.maxPartitionBytes", str(MAX_PARTITION_BYTES))
         # Broadcast joins for small dims (kernel/stopword/marker tables).
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in {**CFG.spark_extra, **(extra or {})}.items():
+    for k, v in (extra or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     _ship_package(spark)

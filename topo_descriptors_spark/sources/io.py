@@ -13,7 +13,11 @@ Scan-side rules encoded here:
 * cropping for windowed computation must keep halo context: filter to
   crop ∪ halo before computing, exact-crop after (the reference computes
   on the full domain and crops at write — helpers.py:59, topo.py:138-140;
-  pruning to the crop alone silently changes boundary results).
+  pruning to the crop alone silently changes boundary results);
+* partition sizing — the scan fan-out (``read_table``) and the state
+  partitions of stateful streaming drains (``state_partitions_for``) —
+  follows the table's own footer stats from the memoized
+  ``_parquet_meta``, not a settings object.
 """
 
 from __future__ import annotations
@@ -81,12 +85,42 @@ def _parquet_meta(path: str, big_cutoff: int) -> tuple[int, int, int]:
     return _SCAN_META[key]
 
 
-def _size_bytes(spec: str) -> int:
-    """'128m' / '1g' / '65536' -> bytes (the Spark size-string subset
-    the engine's own config uses)."""
-    spec = str(spec).strip().lower()
-    mult = {"k": 1024, "m": 1024**2, "g": 1024**3}.get(spec[-1:], 1)
-    return int(float(spec.rstrip("kmg"))) * mult
+# Scan parallelization (read_table): a parquet input whose row-group
+# count is below the cluster's core count cannot feed more scan tasks
+# than it has row groups — every scan-stage expression (tokenize, md5
+# shingles, hash folds) then runs on a handful of cores while the rest
+# idle (guide §2.5 "input skew: one huge unsplittable file ...
+# repartition immediately after the read").  read_table therefore
+# round-robin repartitions such inputs to ``SCAN_REPARTITION_FACTOR ×
+# defaultParallelism`` slices.  All three gates are scale-adaptive, not
+# tuned to local[32]: at production scale a 100-TB table has orders of
+# magnitude more row groups than cores, the trigger condition
+# (row_groups < cores) is false, and the repartition never fires.  Tiny
+# dims (< SCAN_REPARTITION_MIN_BYTES) are skipped — a broadcast-sized
+# side is cheaper to read serially than to shuffle.
+# ``read_table(parallelize=False)`` disables it.
+SCAN_REPARTITION_FACTOR = 3
+SCAN_REPARTITION_MIN_BYTES = 262_144
+# Row floor per produced slice: the slice count is capped at
+# n_rows / this, and the repartition is skipped entirely below
+# SCAN_REPARTITION_MIN_SLICES slices.  Without the floor a small table
+# (sf0.1 embeddings: 2,000 rows) is shredded into factor x cores
+# ~20-row slivers whose per-task Python/Arrow overhead swamps the
+# fan-out (measured r9: blocked cosine 0.61 s -> 1.81 s, ANN 0.51 ->
+# 1.13 s at sf0.1).  At scale the cap is a no-op: 50k docs / 512 = 97
+# slices, already above factor x 32.
+SCAN_REPARTITION_MIN_ROWS_PER_SLICE = 512
+SCAN_REPARTITION_MIN_SLICES = 4
+# Auto mode also requires this many compressed bytes/row: thin-row fact
+# tables decode fast and almost always flow straight into a hash
+# exchange, making a prior round-robin exchange pure cost; wide
+# (text/embedding) rows carry the expression work that wants fan-out.
+# A thin-row opt-in (per-row md5 of a thin key) measured slower at
+# every scale in the r9 A/B, so there is none.
+SCAN_REPARTITION_MIN_ROW_BYTES = 64
+# spark.sql.files.maxPartitionBytes (applied by session.get_spark); an
+# input above cores x this skips the footer reads (see _parquet_meta).
+MAX_PARTITION_BYTES = 128 * 2**20
 
 
 def read_table(
@@ -104,17 +138,17 @@ def read_table(
     the core count, every scan-stage expression (tokenize, md5
     shingles, array folds) serializes on R cores — the guide §2.5
     "unsplittable input" case — so such inputs are round-robin
-    repartitioned to ``CFG.scan_repartition_factor x
-    defaultParallelism`` slices right after the read.  The shuffle
-    moves the raw payload once (bounded: the trigger requires the input
-    to be smaller than cores x maxPartitionBytes-ish); filters still
-    push down to the scan (Catalyst pushes predicates through
-    round-robin Repartition).  At production scale row groups far
-    outnumber cores and this is a no-op; tiny broadcast-sized dims
-    (< CFG.scan_repartition_min_bytes) are also left alone.
+    repartitioned to ``SCAN_REPARTITION_FACTOR x defaultParallelism``
+    slices right after the read.  The shuffle moves the raw payload
+    once (bounded: the trigger requires the input to be smaller than
+    cores x maxPartitionBytes-ish); filters still push down to the scan
+    (Catalyst pushes predicates through round-robin Repartition).  At
+    production scale row groups far outnumber cores and this is a
+    no-op; tiny broadcast-sized dims (< SCAN_REPARTITION_MIN_BYTES) are
+    also left alone.
 
     ``parallelize``: ``None`` (auto) additionally requires wide rows
-    (>= CFG.scan_repartition_min_row_bytes compressed bytes/row) —
+    (>= SCAN_REPARTITION_MIN_ROW_BYTES compressed bytes/row) —
     thin-row tables (numeric event/fact rows) decode fast and usually
     flow straight into a hash exchange (window/as-of/groupBy), where a
     prior round-robin exchange is pure cost (measured r9: events-window
@@ -124,33 +158,60 @@ def read_table(
     """
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.format(fmt).load(path)
-    factor = int(CFG.scan_repartition_factor)
-    if fmt == "parquet" and factor > 0 and parallelize is not False:
+    if fmt == "parquet" and parallelize is not False:
         target = spark.sparkContext.defaultParallelism
-        big = target * _size_bytes(CFG.max_partition_bytes)
-        total_bytes, n_rg, n_rows = _parquet_meta(path, big)
-        wide_enough = (
-            n_rows > 0
-            and total_bytes / n_rows >= int(CFG.scan_repartition_min_row_bytes)
-        )
+        total_bytes, n_rg, n_rows = _parquet_meta(
+            path, target * MAX_PARTITION_BYTES)
         # row floor: never shred a small table into slivers — each
-        # slice must carry >= scan_repartition_min_rows_per_slice rows
+        # slice must carry >= SCAN_REPARTITION_MIN_ROWS_PER_SLICE rows
         # (per-task Python/Arrow overhead is amortized over the slice),
-        # and fewer than scan_repartition_min_slices slices is not
+        # and fewer than SCAN_REPARTITION_MIN_SLICES slices is not
         # enough fan-out to pay for the exchange at all (measured r9:
         # sf0.1 embeddings at factor x cores slivers cost 2-3x).
-        n_slices = factor * target
-        if n_rows > 0:
-            n_slices = min(
-                n_slices,
-                n_rows // max(int(CFG.scan_repartition_min_rows_per_slice), 1),
-            )
-        if (total_bytes >= int(CFG.scan_repartition_min_bytes)
-                and 0 < n_rg < target and wide_enough
-                and n_slices >= max(int(CFG.scan_repartition_min_slices), 1)
+        n_slices = min(SCAN_REPARTITION_FACTOR * target,
+                       n_rows // SCAN_REPARTITION_MIN_ROWS_PER_SLICE)
+        if (total_bytes >= SCAN_REPARTITION_MIN_BYTES
+                and 0 < n_rg < target
+                and n_rows > 0
+                and total_bytes / n_rows >= SCAN_REPARTITION_MIN_ROW_BYTES
+                and n_slices >= SCAN_REPARTITION_MIN_SLICES
                 and n_slices > n_rg):
             df = df.repartition(n_slices)
     return df
+
+
+def state_partitions_for(
+    spark: SparkSession, path: str, light_state: bool = False
+) -> int:
+    """State-partition count for a stateful streaming drain over the
+    parquet table at ``path``, sized to its bytes on disk (r9 A/B,
+    interleaved medians): at gate scale the fixed per-partition
+    state-store commit cost dominates and 8 partitions is best (sf0.1:
+    4.41s total @8 vs 6.22s @32 across the four stateful drains —
+    consistent with the r6 512->8 measurement), while at sf1.0+ the
+    per-event state kernel dominates and wants full core fan-out
+    (w_decayed_stream 9.25s @8 -> 4.69s @32).
+
+    ``light_state``: drains whose per-event state work is O(1) and tiny
+    (dropDuplicates' key-set insert) never amortize the commit cost at
+    these input sizes — the dedup drain measured 2.37s @32 vs 1.41s @8
+    on the 10x corpus (r9 interleaved A/B) while the kernel-heavy
+    drains all preferred @32 there — so the fan-out threshold is 16x
+    higher for them.  Cluster-safe: scales with defaultParallelism,
+    never a hard-coded core count.
+
+    The size comes from ``_parquet_meta`` (same cutoff as read_table,
+    so both share one memo entry), which sums every parquet file of a
+    directory-shaped table.  No stat-able parquet file at ``path``
+    (e.g. a non-local path) fails open to full fan-out."""
+    target = spark.sparkContext.defaultParallelism
+    fan_out = max(8, target)
+    total_bytes, n_rg, _rows = _parquet_meta(path, target * MAX_PARTITION_BYTES)
+    if n_rg == 0:
+        return fan_out
+    if total_bytes < (128 if light_state else 8) * 2**20:
+        return 8
+    return fan_out
 
 
 ZORDER_BITS = 12  # 4096 buckets per dimension — plenty for file-level stats
