@@ -332,3 +332,48 @@ def test_cap_per_group_validation(spark, sf_dir):
     docs = read_table(spark, sf_dir, "documents")
     with _pt.raises(ValueError, match="positive"):
         cap_per_group(docs, "source", 0, "n_chars")
+
+
+# ---- temporal split
+
+
+def test_temporal_split_is_leakage_safe(spark):
+    import datetime as dt
+
+    rows = [
+        (e, i, dt.datetime(2024, 1, 1 + i)) for e in (1, 2) for i in range(10)
+    ]
+    df = spark.createDataFrame(rows, "entity_id int, seq int, ts timestamp")
+    from topo_descriptors_spark.operators.pipeline import temporal_split
+
+    out = temporal_split(df, valid_frac=0.2).collect()
+    for e in (1, 2):
+        train_max = max(r.ts for r in out if r.entity_id == e and r.split == "train")
+        valid_min = min(r.ts for r in out if r.entity_id == e and r.split == "valid")
+        assert train_max < valid_min  # every valid row strictly after train
+    # latest 20% of 10 rows → percent_rank > 0.8 → exactly ranks 9,10 → 1 row?
+    # percent_rank of row i (0-based) = i/9; > 0.8 → i = 8, 9 → 2 rows
+    assert sum(r.split == "valid" for r in out) == 4
+
+
+def test_temporal_split_single_row_entity(spark):
+    import datetime as dt
+
+    df = spark.createDataFrame(
+        [(1, dt.datetime(2024, 1, 1))], "entity_id int, ts timestamp"
+    )
+    from topo_descriptors_spark.operators.pipeline import temporal_split
+
+    assert temporal_split(df).collect()[0].split == "train"
+
+
+def test_temporal_split_validates_frac(spark):
+    import datetime as dt
+
+    df = spark.createDataFrame(
+        [(1, dt.datetime(2024, 1, 1))], "entity_id int, ts timestamp"
+    )
+    from topo_descriptors_spark.operators.pipeline import temporal_split
+
+    with pytest.raises(ValueError):
+        temporal_split(df, valid_frac=1.5)

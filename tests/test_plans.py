@@ -103,16 +103,25 @@ def test_dedup_lines_no_cartesian_single_linecount_join(spark):
 
 
 def test_ngram_jaccard_reuses_shingle_exchange(spark):
-    """The (scan -> md5-shingle -> explode -> distinct) subplan feeds
-    three consumers (sizes, freq, kept) plus the pair self-join; the
-    whole operator is only linear-ish because ReuseExchange dedupes it
-    so the shingle transform runs ONCE (a measured 4x regression if
-    broken — dedup.py r6 A/B).  AQE only materializes reuse in the
-    final adaptive plan, so this pin executes the query and asserts on
-    the '== Final Plan ==' section: at most 2 Generate (explode) nodes
-    — one per side of the pair self-join — and at least one
-    ReusedExchange; without reuse every consumer re-evaluates the
-    transform (6+ Generates, zero ReusedExchange)."""
+    """The (scan -> md5-shingle -> id exchange) subplan feeds three
+    consumers (sizes, freq, kept) plus the pair self-join; the whole
+    operator is only linear-ish because ReuseExchange dedupes it so the
+    md5 shingle transform is not evaluated per consumer (a measured 4x
+    regression if broken — dedup.py r6 A/B).  AQE only materializes
+    reuse in the final adaptive plan, so this pin executes the query
+    and asserts on the '== Final Plan ==' section: at most 2 plan nodes
+    evaluate md5 and at least one ReusedExchange; without reuse every
+    consumer re-evaluates the transform (6 md5 nodes, zero
+    ReusedExchange).  The transform is counted, not the Generate: the
+    explode runs after the exchange, on the per-id deduplicated array,
+    once per consumer.  The second md5 node is the `freq` branch: the
+    self-join's `a.doc_id < b.doc_id` infers an isnotnull(doc_id)
+    filter into sizes and both kept sides, which cannot pass freq's
+    groupBy(sh), so ReuseExchange cannot match that branch.  Filtering
+    null ids up front would leave 1 md5 node but change the max_df
+    counts, which include null-id docs in the DuckDB oracle
+    (test_text_dedup.py::
+    test_ngram_jaccard_null_id_counts_toward_max_df)."""
     from topo_descriptors_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = read_table(spark, SF, "documents")
@@ -121,10 +130,37 @@ def test_ngram_jaccard_reuses_shingle_exchange(spark):
     plan = _plan(df)
     assert "isFinalPlan=true" in plan
     final = plan.split("== Initial Plan ==")[0]
-    n_generate = final.count("Generate ")
+    n_md5 = sum("md5(" in line for line in final.splitlines())
     n_reused = final.count("ReusedExchange")
-    assert n_generate <= 2, (
-        f"shingle explode evaluated {n_generate}x in the final plan - "
+    assert n_md5 <= 2, (
+        f"md5 shingle transform evaluated {n_md5}x in the final plan - "
         "the shared-subplan ReuseExchange is broken (4x regression)"
     )
     assert n_reused >= 1, "no ReusedExchange in the final ngram_jaccard plan"
+
+
+def test_ngram_jaccard_postings_partitioned_by_doc_id_once(
+        spark, sf_correct_dir):
+    """The shingle-hash arrays are hash-partitioned by doc_id once, into
+    defaultParallelism partitions (REPARTITION_BY_NUM, which AQE cannot
+    coalesce to one task).  The per-id dedup, sizes, the kept self-join's
+    stream side and the pair count inherit it, so the final plan has no
+    two-key hashpartitioning(doc_id, doc_id) pair exchange.  Every join
+    stays an equi-join on the shingle hash: no nested-loop or cartesian
+    join."""
+    from topo_descriptors_spark.operators.dedup import ngram_jaccard_pairs
+
+    docs = read_table(spark, sf_correct_dir, "documents")
+    df = ngram_jaccard_pairs(docs, shingle_n=3, threshold=0.12, max_df=100)
+    df.collect()
+    final = _plan(df).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert not re.search(
+        r"Exchange hashpartitioning\(doc_id#\d+L?, doc_id#\d+L?", final)
+    by_num = re.findall(
+        r"Exchange hashpartitioning\(doc_id#\d+L?, (\d+)\), REPARTITION_BY_NUM",
+        final)
+    assert by_num and set(by_num) == {str(spark.sparkContext.defaultParallelism)}
+    assert "BroadcastHashJoin" in final
+    assert "NestedLoopJoin" not in final
+    assert "CartesianProduct" not in final

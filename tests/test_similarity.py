@@ -507,3 +507,80 @@ def test_round_half_away_matches_duckdb_round_exactly():
     ).fetchnumpy()
     dv = next(iter(duck.values()))
     assert np.abs(_round_half_away(x, 9) - dv).max() == 0.0
+
+
+# ---- two-table retrieval join
+
+
+def test_cosine_topk_join_matches_bruteforce(spark):
+    import numpy as np
+
+    from topo_descriptors_spark.operators.similarity import (
+        cosine_topk_join_blocked,
+    )
+
+    rng = np.random.RandomState(3)
+    vecs = [(i, [float(x) for x in rng.randn(8)]) for i in range(30)]
+    df = spark.createDataFrame(vecs, "vec_id int, embedding array<double>")
+    qs = df.where("vec_id % 5 = 0")
+    corpus = df.where("vec_id % 5 != 0")
+    out = cosine_topk_join_blocked(qs, corpus, k=3).collect()
+    got = {}
+    for r in out:
+        got.setdefault(r.id_q, []).append((r.rank, r.id_c))
+    # numpy brute force
+    qd = {i: np.array(v) for i, v in vecs if i % 5 == 0}
+    cd = {i: np.array(v) for i, v in vecs if i % 5 != 0}
+    for qi, qv in qd.items():
+        sims = sorted(
+            ((round(float(qv @ cv / (np.linalg.norm(qv) * np.linalg.norm(cv))), 9), -ci)
+             for ci, cv in cd.items()),
+            reverse=True,
+        )[:3]
+        want = [(-s[1]) for s in sims]
+        assert [c for _, c in sorted(got[qi])] == want, qi
+
+
+def test_cosine_topk_join_blocked_guards(spark):
+    from topo_descriptors_spark.operators.similarity import (
+        cosine_topk_join_blocked,
+    )
+
+    df = spark.createDataFrame(
+        [(i, [1.0, float(i)]) for i in range(10)],
+        "vec_id int, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="max_query_rows"):
+        cosine_topk_join_blocked(df, df, max_query_rows=5)
+    dup = df.union(df.limit(1))
+    with pytest.raises(ValueError, match="distinct"):
+        cosine_topk_join_blocked(dup, df)
+    # dimension mismatch raises inside the kernel (guard, not truncate)
+    q3 = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0])], "vec_id int, embedding array<double>"
+    )
+    with pytest.raises(Exception, match="dim"):
+        cosine_topk_join_blocked(q3, df).collect()
+
+
+def test_cosine_topk_join_blocked_no_corpus_shuffle(spark):
+    """The corpus must reach the scoring kernel without an Exchange:
+    the only shuffle in the plan is the final per-query ranking window
+    over the k-bounded partials."""
+    from topo_descriptors_spark.operators.similarity import (
+        cosine_topk_join_blocked,
+    )
+
+    df = spark.createDataFrame(
+        [(i, [1.0, float(i)]) for i in range(10)],
+        "vec_id int, embedding array<double>",
+    )
+    plan = (
+        cosine_topk_join_blocked(df.where("vec_id < 3"), df.where("vec_id >= 3"))
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    import re
+
+    assert len(re.findall(r"Exchange", plan)) == 1  # ranking window only
+    before_map = plan.split("MapInPandas")[-1]  # children of the kernel
+    assert "Exchange" not in before_map

@@ -250,3 +250,34 @@ def test_run_available_now_pins_state_partitions(spark, tmp_path):
     assert meta["conf"]["spark.sql.shuffle.partitions"] == "2"
     out = spark.read.parquet(str(tmp_path / "out")).where("user_id != 9999")
     assert out.count() == 2  # two sessions (gap > 1h splits user 1 vs 2)
+
+
+# ---- stream enrichment
+
+
+def test_enrich_stream_equals_batch_join(spark, tmp_path):
+    import pandas as pd
+
+    from topo_descriptors_spark.streaming.sessions import enrich_stream
+
+    pdf = pd.DataFrame(
+        {"event_id": range(20), "user_id": [i % 4 for i in range(20)]}
+    )
+    src = str(tmp_path / "src"); (tmp_path / "src").mkdir()
+    spark.createDataFrame(pdf).coalesce(1).write.parquet(f"{src}/b1")
+    dim = spark.createDataFrame(
+        pd.DataFrame({"user_id": [0, 1, 2], "tag": ["a", "b", "c"]})
+    )
+    schema = spark.read.parquet(f"{src}/b1").schema
+    stream = spark.readStream.schema(schema).parquet(f"{src}/*")
+    out = enrich_stream(stream, dim, on="user_id")
+    q = (
+        out.writeStream.format("memory").queryName("enr_test")
+        .outputMode("append").trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckp")).start()
+    )
+    q.awaitTermination()
+    got = spark.table("enr_test").toPandas().sort_values("event_id").reset_index(drop=True)
+    assert len(got) == 20  # left join keeps user 3 (no dim row)
+    assert got.loc[got.user_id == 3, "tag"].isna().all()
+    assert (got.loc[got.user_id == 1, "tag"] == "b").all()

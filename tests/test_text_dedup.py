@@ -118,6 +118,32 @@ def test_ngram_jaccard_exact(docs):
     assert ("d00", "d05") not in m
 
 
+def test_ngram_jaccard_null_id_counts_toward_max_df(spark):
+    """A null-id doc is never paired, but it still counts in a shingle's
+    document frequency, as in the DuckDB oracle: 100 docs share the
+    shingle "alpha beta gamma" (df 100 <= max_df 100, kept), and one
+    null-id doc pushes it to 101, so every pair through it is capped."""
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    rows = [(i, f"alpha beta gamma u{i}a u{i}b") for i in range(100)]
+    rows += [(None, "alpha beta gamma"),
+             (100, "foo bar baz qux"), (101, "foo bar baz qux")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {(r.id_a, r.id_b, round(r.jaccard, 6)) for r in
+           dedup.ngram_jaccard_pairs(df, shingle_n=3, threshold=0.12,
+                                     max_df=100).collect()}
+    sql = entry.oracle_sql()["d_ngram_jaccard"].replace(entry._DOCS_HALF_SQL, "")
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(
+        {"doc_id": pd.array([r[0] for r in rows], dtype="Int64"),
+         "text": [r[1] for r in rows]}))
+    want = {(int(a), int(b), round(float(j), 6))
+            for a, b, j in con.execute(sql).fetchall()}
+    assert got == want == {(100, 101, 1.0)}
+
+
 def test_simhash_near_dups(docs):
     sh = {r.doc_id: r.simhash for r in dedup.simhash(docs).collect()}
     def hamming(a, b):

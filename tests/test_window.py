@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from topo_descriptors_spark.operators import window as W
+from topo_descriptors_spark.operators.window import cumulative_distinct
 from topo_descriptors_spark.sources import synthetic
 
 
@@ -423,3 +424,38 @@ def test_decayed_features_single_window_pass(spark):
 
     n_exchange = len(re.findall(r"^[\s+:*-]*Exchange\b", plan, re.M))
     assert n_exchange == 1, plan
+
+
+# ---- cumulative distinct
+
+
+def test_cumulative_distinct_with_ties(spark):
+    import datetime as dt
+
+    T = lambda s: dt.datetime(2024, 1, 1, 0, 0, s)
+    rows = [
+        (1, T(1), "x"), (1, T(2), "y"), (1, T(2), "z"),  # tie at t=2
+        (1, T(3), "x"),
+        (2, T(1), "x"),
+    ]
+    df = spark.createDataFrame(rows, "entity_id int, ts timestamp, v string")
+    out = cumulative_distinct(df, "v", entity="entity_id", order="ts")
+    got = sorted(
+        (r.entity_id, r.ts.second, r.v, r.n_distinct) for r in out.collect()
+    )
+    # peers at t=2 both see the full peer set {x,y,z}
+    assert got == [
+        (1, 1, "x", 1), (1, 2, "y", 3), (1, 2, "z", 3), (1, 3, "x", 3),
+        (2, 1, "x", 1),
+    ]
+
+
+def test_cumulative_distinct_ignores_nulls(spark):
+    import datetime as dt
+
+    T = lambda s: dt.datetime(2024, 1, 1, 0, 0, s)
+    rows = [(1, T(1), None), (1, T(2), "a")]
+    df = spark.createDataFrame(rows, "entity_id int, ts timestamp, v string")
+    out = {r.ts.second: r.n_distinct for r in
+           cumulative_distinct(df, "v", entity="entity_id", order="ts").collect()}
+    assert out == {1: 0, 2: 1}

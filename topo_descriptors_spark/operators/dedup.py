@@ -220,29 +220,71 @@ def ngram_jaccard_pairs(
     at corpus scale.  Exactness caveat: a pair whose every common
     shingle is capped is missed; with threshold >= 0.5 such pairs would
     need most of their content to be boilerplate.
+
+    Partition layout: each document's shingle-hash array is
+    hash-partitioned by ``id_col`` ONCE, into ``defaultParallelism``
+    partitions, and deduplicated per id right after that exchange
+    (``collect_list`` -> ``flatten`` -> ``array_distinct``, null hashes
+    dropped; this also merges rows that share an id, null ids
+    included, as SQL DISTINCT does).  Exploding that array gives the
+    distinct ``(id, sh)`` postings with no row-level aggregate, and
+    ``n_sh`` is its size.
+    ``sizes``, the stream side of the broadcast ``kept`` self-join and
+    the ``(id_a, id_b)`` count all inherit the layout: each ``id_a``'s
+    postings sit in one task, so the partial pair count is already
+    final and no pair exchange is planned.  An explicit-count
+    repartition is also one AQE cannot coalesce; left to AQE, the
+    shingle exchange was coalesced by its input bytes to ONE task while
+    the self-join after it fans out ~4x (near_dup benchmark, seed 101,
+    4 cores: one 0.87 s task of a ~2.4 s job).  When ``kept`` outgrows
+    the broadcast threshold the sh-keyed exchanges come back, but the
+    id exchange is still not an extra one: it replaces the
+    ``(id, sh)`` exchange a row-level ``distinct`` would need.
+    Measured worse (4 cores): repartitioning the exploded postings by
+    id and running ``distinct`` after the exchange — each of the four
+    consumer stages then re-ran a partial + final HashAggregate over
+    every posting, no faster than the AQE-sized row-level ``distinct``
+    on the 10x corpus;
+    ``distinct`` first, then the id repartition — one more shuffle,
+    slower again in a 3-round screen; ``n = 32`` (the
+    shuffle-partition default) on the near_dup benchmark — 2.13 s and
+    2.15 s, no gain over leaving the count to AQE; partitioning by
+    ``sh`` instead — the partial pair rows grew
+    306k -> 663k (960k with only ``kept`` repartitioned), with no gain.
     """
-    # explode_outer, not explode: plain explode lets Catalyst infer a
-    # size(...)>0 filter that predicate-pushdown rewrites into a SECOND
-    # full evaluation of the md5 shingle expression below the Generate
-    # (measured 6x slowdown); outer explode infers nothing, and the
-    # cheap attribute filter afterwards drops the empty-array rows.
-    sh = (
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
+    docs = (
         with_shingle_hashes(df, text, shingle_n, "_nj_hs")
-        .select(F.col(id_col), F.explode_outer(F.col("_nj_hs")).alias("sh"))
-        .where(F.col("sh").isNotNull())
-        .distinct()
+        .select(F.col(id_col), F.col("_nj_hs"))
+        .repartition(n_parts, id_col)
+        .groupBy(id_col)
+        .agg(F.array_compact(F.array_distinct(F.flatten(
+            F.collect_list("_nj_hs")))).alias("_nj_hs"))
     )
-    # sizes/freq/kept all hang off `sh` ON PURPOSE: Spark's ReuseExchange
-    # dedupes the (scan -> shingle-hash -> explode -> distinct) subplan
-    # across all three consumers, so the expensive md5-shingle transform
-    # runs once per self-join side (final AQE plan: 2 Generates + 4
-    # ReusedExchanges; without reuse, 6+ Generates).  Deriving n_sh
-    # map-side from the hash array instead (size(array_distinct(...)))
-    # looks cheaper — one less groupBy — but re-evaluates the transform
-    # per join consumer and measured 4x SLOWER at sf0.1 (3.0 s ->
-    # 12.0 s, r6 A/B).  Plan-pinned (AQE shows reuse only in the
-    # post-execution final plan): tests/test_plans.py::
-    # test_ngram_jaccard_reuses_shingle_exchange.
+    # Plain explode is safe only above the aggregate: the size(...) > 0
+    # filter Catalyst infers for it stops there.  Below it, the filter
+    # would be pushed into a second full evaluation of the md5 shingle
+    # expression (measured 6x slowdown).
+    sh = docs.select(F.col(id_col), F.explode(F.col("_nj_hs")).alias("sh"))
+    # sizes/freq/kept all hang off `docs` ON PURPOSE: Spark's
+    # ReuseExchange dedupes the (scan -> shingle-hash -> id exchange)
+    # subplan across its consumers, so the md5 shingle transform is not
+    # evaluated per consumer (final AQE plan: 2 md5 evaluations; without
+    # reuse, 6).  The second evaluation is the `freq` branch, not a
+    # self-join side: `a.id < b.id` infers an isnotnull(id) filter that
+    # pushes down into sizes and both kept sides but not through freq's
+    # groupBy(sh), so freq's subplan differs and ReuseExchange cannot
+    # match it.  Filtering null ids first would merge the branches, but
+    # it changes the max_df counts: the DuckDB oracle counts null-id
+    # docs in the shingle document frequency (pinned by
+    # tests/test_text_dedup.py::
+    # test_ngram_jaccard_null_id_counts_toward_max_df).  n_sh is read
+    # off the deduplicated array behind the exchange; deriving it from
+    # the hash array BEFORE the exchange (size(array_distinct(...)))
+    # re-evaluated the transform per join consumer and measured 4x
+    # SLOWER at sf0.1 (3.0 s -> 12.0 s, r6 A/B).  Plan-pinned (AQE
+    # shows reuse only in the post-execution final plan):
+    # tests/test_plans.py::test_ngram_jaccard_reuses_shingle_exchange.
     #
     # r9 NOTE: the grouped-pair-generation rewrite that replaced the
     # bucket self-joins in lsh_candidate_pairs / simhash_pairs was
@@ -253,7 +295,7 @@ def ngram_jaccard_pairs(
     # measured 2.4 -> 8.3 s at sf0.1 and 6.2 -> 166 s on the 10x
     # corpus.  The codegen'd equi-join IS the fast path at shingle
     # granularity.
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+    sizes = docs.select(F.col(id_col), F.size("_nj_hs").alias("n_sh"))
     freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df_"))
     kept = sh.join(freq.where(F.col("df_") <= max_df), "sh").select(id_col, "sh")
     a, b = kept.alias("a"), kept.alias("b")
