@@ -54,7 +54,7 @@ ALLOWED_EAGER = {
     "w_window_counts_stream", "w_enrich_stream",  # availableNow drains
     "k_cms_counts",              # bounded grid collect (features.py:862)
     "s_cosine_topk_join_blocked",  # bounded query-side guard+collect
-    "s_ivf_topk",                # bounded centroid fit (similarity.py:407)
+    "s_ivf_topk",                # bounded centroid fit (similarity.py:366)
     # found BY this gate when the machine detection landed (r7) — the
     # r6 hand-adjudication missed these; each is bounded or iterative
     # by design, not an accident:
@@ -65,8 +65,11 @@ ALLOWED_EAGER = {
                                  # mean/std agg (.first()) that
                                  # parameterizes the kernel closure
     "d_dedup_components",        # iterative min-label propagation:
-    "d_components_star",         # O(log^2 n) rounds, each a bounded
-    "d_keep_best",               # convergence-check count (documented
+    "d_components_star",         # one eager edge checkpoint, then
+    "d_keep_best",               # O(diameter) rounds up to
+                                 # max_iterations, each one eager
+                                 # localCheckpoint whose observe() is
+                                 # the convergence probe (documented
                                  # budget raise in dedup.py)
 }
 

@@ -214,53 +214,32 @@ def test_connected_components_chain_and_singletons(spark):
     assert out == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4, 6: 6}
 
 
-def test_connected_components_star_equals_label(spark):
-    import pandas as pd
-
-    from topo_descriptors_spark.operators.dedup import connected_components
-
-    nodes = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [0, 1, 2, 3, 4, 5, 6]})
-    )
-    pairs = spark.createDataFrame(
-        pd.DataFrame({"id_a": [0, 1, 4], "id_b": [1, 2, 5]})
-    )
-    out = (
-        connected_components(nodes, pairs, method="star")
-        .toPandas()
-        .set_index("doc_id")["component"]
-        .to_dict()
-    )
-    assert out == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4, 6: 6}
-
-
 def test_connected_components_long_chain(spark):
-    """A 120-hop duplicate chain: min-label propagation would need
+    """A 120-hop duplicate chain: min-label propagation needs
     ~diameter iterations — it must RAISE at an exhausted budget (never
-    return silently truncated labels), while the large-star/small-star
-    method converges in O(log² n) rounds regardless of diameter."""
+    return silently truncated labels), while a 20-hop chain converges
+    within the default budget of 25."""
     import pandas as pd
     import pytest as pt
 
     from topo_descriptors_spark.operators.dedup import connected_components
 
-    n = 121
-    nodes = spark.createDataFrame(pd.DataFrame({"doc_id": list(range(n))}))
-    pairs = spark.createDataFrame(
-        pd.DataFrame({"id_a": list(range(n - 1)), "id_b": list(range(1, n))})
-    )
-    with pt.raises(RuntimeError, match="did not converge"):
-        connected_components(nodes, pairs, max_iterations=10)
-    out = (
-        connected_components(nodes, pairs, method="star", max_iterations=30)
-        .toPandas()
-    )
-    assert (out["component"] == 0).all()
+    def chain(n):
+        nodes = spark.createDataFrame(pd.DataFrame({"doc_id": list(range(n))}))
+        pairs = spark.createDataFrame(
+            pd.DataFrame({"id_a": list(range(n - 1)), "id_b": list(range(1, n))})
+        )
+        return nodes, pairs
+
+    with pt.raises(RuntimeError, match="did not converge.*raise max_iterations"):
+        connected_components(*chain(121), max_iterations=10)
+    out = connected_components(*chain(21)).toPandas()
+    assert len(out) == 21 and (out["component"] == 0).all()
 
 
-def test_connected_components_star_shuffled_ids(spark):
-    """Star method on a permuted-id graph (roots are not the first ids)
-    plus self-loop-free determinism: labels equal the per-component min."""
+def test_connected_components_shuffled_ids(spark):
+    """A permuted-id graph (roots are not the first ids) plus
+    self-loop-free determinism: labels equal the per-component min."""
     import pandas as pd
 
     from topo_descriptors_spark.operators.dedup import connected_components
@@ -271,7 +250,7 @@ def test_connected_components_star_shuffled_ids(spark):
         pd.DataFrame({"id_a": [9, 14, 11], "id_b": [2, 9, 5]})
     )
     out = (
-        connected_components(nodes, pairs, method="star")
+        connected_components(nodes, pairs)
         .toPandas()
         .set_index("doc_id")["component"]
         .to_dict()
@@ -410,10 +389,10 @@ def test_dedup_lines_drops_boilerplate_keeps_order(spark):
     assert out.loc[3, "text_dedup"] == "" and out.loc[3, "n_dropped"] == 1
 
 
-def test_connected_components_random_graphs_both_methods(spark):
+def test_connected_components_random_graphs(spark):
     """Randomized graphs vs a pure-python union-find oracle: min-label
-    and large-star/small-star must both produce min-reachable-id labels
-    on every shape (cliques, chains, forests, singletons)."""
+    propagation must produce min-reachable-id labels on every shape
+    (cliques, chains, forests, singletons)."""
     import numpy as np
     import pandas as pd
 
@@ -454,13 +433,11 @@ def test_connected_components_random_graphs_both_methods(spark):
             if edges
             else spark.createDataFrame([], "id_a bigint, id_b bigint")
         )
-        for method in ("label", "star"):
-            got = (
-                connected_components(ndf, pdf, method=method,
-                                     max_iterations=50)
-                .toPandas().set_index("doc_id")["component"].to_dict()
-            )
-            assert got == expect, f"trial={trial} method={method}"
+        got = (
+            connected_components(ndf, pdf, max_iterations=50)
+            .toPandas().set_index("doc_id")["component"].to_dict()
+        )
+        assert got == expect, f"trial={trial}"
 
 
 def test_dedup_lines_null_text_survives_and_passthrough(spark):

@@ -32,6 +32,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from topo_descriptors_spark.functions.planner import gaussian_weights
+
 FFT_AREA_THRESHOLD = 225  # kernel cells above which FFT convolution wins
 
 
@@ -82,23 +84,16 @@ def ndimage_convolve(a: np.ndarray, k: np.ndarray) -> np.ndarray:
     return _correlate2d(a, np.flip(k), mode="reflect")
 
 
-def gaussian_kernel1d(sigma: float, truncate: float = 4.0) -> np.ndarray:
-    radius = int(truncate * float(sigma) + 0.5)
-    x = np.arange(-radius, radius + 1, dtype=np.float64)
-    w = np.exp(-0.5 * (x / float(sigma)) ** 2)
-    return w / w.sum()
-
-
 def gaussian_filter(a: np.ndarray, sigma, truncate: float = 4.0) -> np.ndarray:
     """Separable 2-D Gaussian with reflect padding (ndimage default).
     ``sigma`` may be a scalar or (sigma_y, sigma_x)."""
     sy, sx = (sigma, sigma) if np.isscalar(sigma) else sigma
     out = a.astype(np.float64)
     if sy and sy > 0:
-        ky = gaussian_kernel1d(sy, truncate)[:, None]
+        ky = gaussian_weights(sy, truncate)[:, None]
         out = _correlate2d(out, ky, mode="reflect")
     if sx and sx > 0:
-        kx = gaussian_kernel1d(sx, truncate)[None, :]
+        kx = gaussian_weights(sx, truncate)[None, :]
         out = _correlate2d(out, kx, mode="reflect")
     return out
 

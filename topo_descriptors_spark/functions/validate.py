@@ -116,9 +116,8 @@ def reserve_cols(df: DataFrame, op: str, *names: str) -> None:
     """Assert none of the operator's internal temp-column ``names`` is
     already present in ``df`` — an input that carries e.g. ``_bkt``
     would otherwise be silently clobbered by ``withColumn`` and dropped
-    from the output (VERDICT r4).  Mirrors ``decayed_features``' inline
-    check; factored here so every temp-column operator applies it
-    uniformly.  Driver-side only: inspects ``df.columns``.
+    from the output (VERDICT r4).  Every temp-column operator applies
+    this one check.  Driver-side only: inspects ``df.columns``.
     """
     clash = [n for n in names if n in df.columns]
     if clash:

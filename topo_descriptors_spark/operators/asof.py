@@ -34,10 +34,11 @@ wins on every axis.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from topo_descriptors_spark.functions.cols import axis_seconds
+from topo_descriptors_spark.functions.validate import reserve_cols
 
 
 # "matched_ts" is reserved too: it is the join's OUTPUT column, and a
@@ -446,9 +447,8 @@ def interval_join(
     """
     if how not in ("inner", "left"):
         raise ValueError(f"interval_join: unsupported how={how!r}")
-    for c in ("_ebucket", "_ibucket", "_ets", "_is", "_ie"):
-        if c in events.columns or c in intervals.columns:
-            raise ValueError(f"interval_join: reserved column name {c!r} in input")
+    for side in (events, intervals):
+        reserve_cols(side, "interval_join", "_ebucket", "_ibucket", "_ets", "_is", "_ie")
     clash = (set(events.columns) & set(intervals.columns)) - {on}
     if clash:
         raise ValueError(

@@ -31,16 +31,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.validate import require_cols
+from .text import PORTABLE_HASH_SQL
 
 __all__ = ["bloom_build", "bloom_prune", "bloom_fp_rate"]
-
-_PORTABLE_HASH = "cast(conv(substr(md5(cast({col} as binary)),1,15),16,10) as bigint)"
 
 
 def _pos_expr(col_sql: str, i: int, m_bits: int) -> str:
     """Bit position of hash function ``i`` for key expression ``col_sql``."""
     token = f"concat('{i}', ':', cast({col_sql} as string))"
-    return f"pmod({_PORTABLE_HASH.format(col=token)}, {int(m_bits)})"
+    return f"pmod({PORTABLE_HASH_SQL.format(col=token)}, {int(m_bits)})"
 
 
 def bloom_fp_rate(n_keys: int, m_bits: int, g_hashes: int) -> float:

@@ -22,7 +22,7 @@ Scale design (the 100-TB story):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from topo_descriptors_spark.functions.validate import require_cols
@@ -137,28 +137,49 @@ def lsh_candidate_pairs(
         F.col(id_col),
         F.posexplode(F.array(*band_cols)).alias("band_id", "band_key"),
     )
-    # r9: grouped pair generation instead of the bucket self-join — ONE
-    # groupBy collects each bucket's (distinct by construction) ids,
-    # the cap filter is size(_ids) <= max_bucket (identical to the old
-    # count <= max_bucket), and the i<j pairs are generated in-row with
-    # array lambdas.  Same candidate set, but the counts groupBy + cap
-    # join + self-join (3 exchanges + a join that re-shuffled the
-    # banded rows twice) collapse into one exchange; per-bucket work is
-    # O(k^2) with k <= max_bucket, exactly what the join paid.
-    # Measured 10x corpus: candidate stage 3.9 s -> 2.3 s.
-    grouped = (
-        banded.groupBy("band_id", "band_key")
-        .agg(F.collect_list(id_col).alias("_ids"))
-        .where(F.size("_ids") <= max_bucket)
-    )
+    return _bucket_pairs(banded, ["band_id", "band_key"], id_col, max_bucket)
+
+
+def _bucket_pairs(
+    banded: DataFrame,
+    keys: list[str],
+    id_col: str,
+    max_bucket: int,
+    payload: str | None = None,
+) -> DataFrame:
+    """Distinct ``(id_a, id_b)`` pairs (id_a < id_b) of rows sharing a
+    bucket ``keys`` value; with ``payload``, each side's ``payload``
+    value rides along as ``{payload}_a`` / ``{payload}_b``.  Buckets of
+    more than ``max_bucket`` rows are dropped.
+
+    r9: grouped pair generation instead of the bucket self-join — ONE
+    groupBy collects each bucket's (distinct by construction) ids, the
+    cap filter is size(_ids) <= max_bucket (identical to the old
+    count <= max_bucket), and the i<j pairs are generated in-row with
+    array lambdas.  Same candidate set, but the counts groupBy + cap
+    join + self-join (3 exchanges + a join that re-shuffled the banded
+    rows twice) collapse into one exchange; per-bucket work is O(k^2)
+    with k <= max_bucket, exactly what the join paid.  Measured 10x
+    corpus (LSH candidate stage): 3.9 s -> 2.3 s.
+    """
+    item, x, y, extra = F.col(id_col), "x", "y", []
+    if payload is not None:
+        item = F.struct(F.col(id_col).alias("id"), F.col(payload).alias("p"))
+        x, y = "x.id", "y.id"
+        extra = [f"x.p as {payload}_a", f"y.p as {payload}_b"]
+    fields = ", ".join([f"{x} as id_a", f"{y} as id_b", *extra])
     pair_expr = (
-        "flatten(transform(_ids, x -> "
-        "transform(filter(_ids, y -> y > x), "
-        "y -> struct(x as id_a, y as id_b))))"
+        f"flatten(transform(_ids, x -> transform(filter(_ids, y -> {y} > {x}), "
+        f"y -> struct({fields}))))"
+    )
+    grouped = (
+        banded.groupBy(*keys)
+        .agg(F.collect_list(item).alias("_ids"))
+        .where(F.size("_ids") <= max_bucket)
     )
     return (
         grouped.select(F.explode(F.expr(pair_expr)).alias("_p"))
-        .select(F.col("_p.id_a").alias("id_a"), F.col("_p.id_b").alias("id_b"))
+        .select("_p.*")
         .distinct()
     )
 
@@ -374,34 +395,14 @@ def simhash_pairs(
     banded = hashed.select(
         F.col(id_col), F.col("simhash"), F.posexplode(chunks).alias("chunk_id", "chunk")
     )
-    # r9: grouped pair generation replaces the chunk-bucket self-join
-    # (same rewrite as lsh_candidate_pairs — one exchange instead of
-    # counts groupBy + cap join + self-join, identical pair set; the
-    # cap filter size(_ids) <= max_bucket equals the old count cap).
-    grouped = (
-        banded.groupBy("chunk_id", "chunk")
-        .agg(
-            F.collect_list(
-                F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("sh"))
-            ).alias("_ids")
+    return (
+        _bucket_pairs(banded, ["chunk_id", "chunk"], id_col, max_bucket, "simhash")
+        .withColumn(
+            "hamming", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
         )
-        .where(F.size("_ids") <= max_bucket)
-    )
-    pair_expr = (
-        "flatten(transform(_ids, x -> "
-        "transform(filter(_ids, y -> y.id > x.id), "
-        "y -> struct(x.id as id_a, y.id as id_b, "
-        "x.sh as sh_a, y.sh as sh_b))))"
-    )
-    pairs = (
-        grouped.select(F.explode(F.expr(pair_expr)).alias("_p"))
-        .select("_p.id_a", "_p.id_b", "_p.sh_a", "_p.sh_b")
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
         .where(F.col("hamming") <= F.lit(max_hamming))
         .select("id_a", "id_b", "hamming")
     )
-    return pairs
 
 
 def decontaminate(
@@ -472,41 +473,37 @@ def connected_components(
     dst: str = "id_b",
     out: str = "component",
     max_iterations: int = 25,
-    method: str = "label",
 ) -> DataFrame:
     """Duplicate groups from near-dup pairs: every node labeled with the
     MIN id reachable through the pair graph (singletons keep their own
     id) — the step that turns candidate pairs into keep/drop decisions.
 
-    Two interchangeable algorithms (identical output, pinned in pytest):
-
-    * ``method="label"`` (default) — min-label propagation: each
-      iteration joins current labels across the (symmetrized) edge set
-      and takes the elementwise min; converges in O(graph diameter)
-      iterations — tiny for dedup graphs, whose components are
-      near-cliques.  Each iteration is one shuffle join + one
-      aggregation; labels are localCheckpoint()ed so lineage stays flat.
-    * ``method="star"`` — large-star/small-star alternation (Kiveris et
-      al., "Connected Components in MapReduce and Beyond", SoCC'14):
-      converges in O(log² n) rounds REGARDLESS of diameter — the swap
-      for pathological chain graphs (duplicate chains >~25 hops) where
-      label propagation would need diameter iterations.
-
-    Both RAISE if the iteration budget is exhausted before convergence —
-    truncated labels silently splitting one component into several is
-    never acceptable for dedup keep/drop decisions.
+    Min-label propagation: each iteration joins current labels across
+    the (symmetrized) edge set and takes the elementwise min; converges
+    in O(graph diameter) iterations — tiny for dedup graphs, whose
+    components are near-cliques.  Each iteration is one shuffle join +
+    one aggregation; labels are localCheckpoint()ed so lineage stays
+    flat.  ``max_iterations`` bounds the diameter it can resolve: a
+    duplicate chain longer than the budget RAISES — truncated labels
+    silently splitting one component into several is never acceptable
+    for dedup keep/drop decisions — so raise ``max_iterations`` for
+    such graphs.  Large-star/small-star (Kiveris et al., SoCC'14), whose
+    O(log² n) rounds do not grow with the diameter, gave identical
+    labels but was slower on the dedup pair graph it would serve
+    (MinHash pairs of the sf0.1 even-id docs, 4 cores: 3.10 s against
+    2.73 s for this form, median of 10 interleaved rounds), so it is
+    not offered.
 
     Deterministic, so the driver-gate oracle replays it exactly with a
     recursive-CTE transitive closure.
     """
-    if method == "star":
-        return _cc_star(nodes, pairs, id_col, src, dst, out, max_iterations)
-    if method != "label":
-        raise ValueError(f"connected_components: unknown method {method!r}")
     e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    # materialized once: every iteration joins the edges, and a lazy
+    # edge set would re-run the whole upstream pair pipeline (MinHash
+    # banding, verification joins) per iteration
     edges = e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).distinct()
+    ).distinct().localCheckpoint()
     labels = nodes.select(F.col(id_col).alias("id")).distinct().withColumn(
         "label", F.col("id")
     )
@@ -546,107 +543,9 @@ def connected_components(
         raise RuntimeError(
             "connected_components: min-label propagation did not converge "
             f"within max_iterations={max_iterations} (graph diameter exceeds "
-            "the iteration budget) — raise max_iterations or use "
-            "method='star' (diameter-independent O(log² n) rounds)"
+            "the iteration budget) — raise max_iterations"
         )
     return labels.select(F.col("id").alias(id_col), F.col("label").alias(out))
-
-
-def _cc_star(
-    nodes: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    src: str,
-    dst: str,
-    out: str,
-    max_iterations: int,
-) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.,
-    SoCC'14).  Each round:
-
-    * **large-star** — per node u over the symmetrized neighborhood,
-      m = min(N(u) ∪ {u}); re-point every STRICTLY LARGER neighbor at m.
-    * **small-star** — orient edges high→low, per node u,
-      m = min(N(u) ∪ {u}); re-point u and its smaller neighbors at m.
-
-    Both steps preserve connectivity and strictly shrink star heights;
-    the fixed point is a forest of stars centered at component minima —
-    reached in O(log² n) rounds independent of graph diameter.  Each
-    round is two groupBy-min aggregations + two equi-joins (same shapes
-    as label propagation); convergence is probed with a one-pass
-    permutation-invariant fingerprint (count + sum(xxhash64)) instead of
-    a set-difference join.
-    """
-    e = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    edges = e
-    prev_fp = None
-    converged = False
-    for _ in range(max_iterations):
-        # -- large-star ----------------------------------------------
-        sym = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = sym.groupBy("u").agg(F.min("v").alias("mv")).select(
-            "u", F.least(F.col("u"), F.col("mv")).alias("m")
-        )
-        ls = (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # -- small-star ----------------------------------------------
-        oriented = ls.select(
-            F.greatest(F.col("u"), F.col("v")).alias("u"),
-            F.least(F.col("u"), F.col("v")).alias("v"),
-        )
-        mins2 = oriented.groupBy("u").agg(F.min("v").alias("m"))
-        ss = (
-            oriented.join(mins2, "u")
-            .select(F.col("v").alias("n"), F.col("m"))
-            .unionByName(mins2.select(F.col("u").alias("n"), F.col("m")))
-            .where(F.col("n") != F.col("m"))
-            .select(F.col("n").alias("u"), F.col("m").alias("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        edges = ss
-        fp_row = edges.agg(
-            F.count(F.lit(1)).alias("c"),
-            # decimal(38,0) sum: permutation-invariant set fingerprint
-            # that cannot overflow under ANSI mode
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        ).first()
-        fp = (fp_row["c"], fp_row["h"])
-        if fp == prev_fp:
-            converged = True
-            break
-        prev_fp = fp
-    if not converged:
-        raise RuntimeError(
-            "connected_components: large-star/small-star did not converge "
-            f"within max_iterations={max_iterations} — raise max_iterations"
-        )
-    # at the fixed point edges form stars (child -> component min); the
-    # groupBy-min is a cheap belt-and-braces reduction, not a correctness
-    # crutch
-    stars = edges.groupBy("u").agg(F.min("v").alias("label"))
-    labels = nodes.select(F.col(id_col).alias("id")).distinct().join(
-        stars.select(F.col("u").alias("id"), "label"), "id", "left"
-    )
-    return labels.select(
-        F.col("id").alias(id_col),
-        F.coalesce(F.col("label"), F.col("id")).alias(out),
-    )
 
 
 def select_canonical(

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.validate import require_cols, reserve_cols
+from .pipeline import HASH_SPACE
+from .text import HASH_PRIME, PORTABLE_HASH_SQL
 
 __all__ = [
     "target_encode",
@@ -41,12 +43,6 @@ __all__ = [
     "group_entropy",
     "impute",
 ]
-
-# portable across Spark and DuckDB (see text.py:23): 15 hex chars of
-# md5 -> non-negative bigint in [0, 2^60)
-_PORTABLE_HASH = "cast(conv(substr(md5(cast({col} as binary)),1,15),16,10) as bigint)"
-_HASH_SPACE = float(1 << 60)
-
 
 # ---------------------------------------------------------------------------
 # encodings
@@ -82,9 +78,7 @@ def target_encode(
     shuffled hash join on the vocabulary key).
     """
     require_cols(df, "target_encode", **{category: "atomic", target: "numeric"})
-    for c in ("_cat_sum", "_cat_n", "_gmean", out_col):
-        if c in df.columns and c != out_col:
-            raise ValueError(f"target_encode: reserved column name {c!r} in input")
+    reserve_cols(df, "target_encode", "_cat_sum", "_cat_n", "_gmean")
 
     stats = df.groupBy(category).agg(
         F.sum(target).alias("_cat_sum"),
@@ -207,7 +201,7 @@ def feature_hash(
         else:
             token = f"concat('{c}', '=', cast(`{c}` as string))"
             val = f"if(`{c}` is null, cast(null as double), 1.0d)"
-        h = _PORTABLE_HASH.format(col=token)
+        h = PORTABLE_HASH_SQL.format(col=token)
         pair_exprs.append(
             f"named_struct('idx', cast(pmod({h}, {n}) as int), "
             f"'val', (cast(({h}) % 2 as double) * 2.0d - 1.0d) * ({val}))"
@@ -274,7 +268,7 @@ def hash_vectorize_text(
             "else array() end"
         ),
     )
-    h = _PORTABLE_HASH.format(col="x")
+    h = PORTABLE_HASH_SQL.format(col="x")
     d = d.withColumn(
         "_hb", F.expr(f"transform(_ng, x -> cast(pmod({h}, {n}) as int))")
     )
@@ -326,9 +320,7 @@ def rolling_quantiles(
     )
     if k <= 0:
         raise ValueError("rolling_quantiles: k must be positive")
-    for c in ("_rqa",):
-        if c in df.columns:
-            raise ValueError(f"rolling_quantiles: reserved column {c!r} in input")
+    reserve_cols(df, "rolling_quantiles", "_rqa")
     ob = [F.col(order)] + ([F.col(tiebreak)] if tiebreak else [])
     w = (
         Window.partitionBy(entity)
@@ -390,7 +382,7 @@ def kmv_distinct(
         require_cols(df, "kmv_distinct", **{group_by: "atomic"})
     if k < 2:
         raise ValueError("kmv_distinct: k must be >= 2")
-    h = F.expr(_PORTABLE_HASH.format(col=f"cast(`{col}` as string)"))
+    h = F.expr(PORTABLE_HASH_SQL.format(col=f"cast(`{col}` as string)"))
     gcol = group_by if group_by is not None else None
     keys = [gcol] if gcol else []
     hashes = (
@@ -408,7 +400,7 @@ def kmv_distinct(
     grp = topk.groupBy(*keys) if keys else topk.groupBy()
     est = grp.agg(
         F.count(F.lit(1)).alias("n_kept"),
-        F.max(F.col("_h").cast("double") / F.lit(_HASH_SPACE)).alias("_hk"),
+        F.max(F.col("_h").cast("double") / F.lit(HASH_SPACE)).alias("_hk"),
     )
     return est.select(
         *keys,
@@ -453,8 +445,7 @@ def quantile_bin(
     nb = int(n_bins)
     if nb < 2:
         raise ValueError("quantile_bin: n_bins must be >= 2")
-    if "_qedges" in df.columns or out_col in df.columns:
-        raise ValueError("quantile_bin: reserved/output column already in input")
+    reserve_cols(df, "quantile_bin", "_qedges", out_col)
     qs = [i / nb for i in range(1, nb)]
     edges = df.agg(
         F.expr(
@@ -541,9 +532,7 @@ def robust_scale(
     require_cols(df, "robust_scale", **{value: "numeric"})
     if group_by is not None:
         require_cols(df, "robust_scale", **{group_by: "atomic"})
-    for c in ("_med", "_iqr", out_col):
-        if c in df.columns:
-            raise ValueError(f"robust_scale: reserved column {c!r} in input")
+    reserve_cols(df, "robust_scale", "_med", "_iqr", out_col)
     dp = int(round_dp)
     pexpr = F.expr(f"percentile(`{value}`, array(0.25, 0.5, 0.75))")
     aggs = [
@@ -655,16 +644,13 @@ def impute(
     shuffles.
     """
     require_cols(df, "impute", **{value: "numeric"})
-    reserve_cols(df, "impute", "_fill", "_gfill")
+    out = out_col or f"{value}_filled"
+    ind = f"{value}_was_null"
+    reserve_cols(df, "impute", out, ind, "_fill", "_gfill")
     if group_by is not None:
         require_cols(df, "impute", **{group_by: "atomic"})
     if strategy not in ("median", "mean"):
         raise ValueError(f"impute: unknown strategy {strategy!r}")
-    out = out_col or f"{value}_filled"
-    ind = f"{value}_was_null"
-    for c in (out, ind, "_fill", "_gfill"):
-        if c in df.columns:
-            raise ValueError(f"impute: reserved/output column {c!r} in input")
     dp = int(round_dp)
     stat = (
         F.expr(f"percentile(`{value}`, 0.5)") if strategy == "median"
@@ -828,7 +814,6 @@ def cms_counts(
     replay) — coalesce the key first if NULL should count as a value.
     """
     from topo_descriptors_spark.operators.dedup import minhash_params
-    from topo_descriptors_spark.operators.text import HASH_PRIME, PORTABLE_HASH_SQL
 
     require_cols(df, "cms_counts", **{key: "atomic"})
     params = minhash_params(int(depth))

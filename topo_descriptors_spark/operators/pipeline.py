@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from topo_descriptors_spark.functions.validate import require_cols
+from topo_descriptors_spark.functions.validate import require_cols, reserve_cols
 from topo_descriptors_spark.operators.text import PORTABLE_HASH_SQL
 
 # the portable hash is the first 15 hex chars of md5 -> [0, 16^15) = [0, 2^60)
@@ -345,11 +345,7 @@ def chunk_sequences(
         raise ValueError(
             f"chunk_sequences: overlap={overlap} must be < max_len={max_len}"
         )
-    for c in ("_nchunks", chunk_col):
-        if c in df.columns:
-            raise ValueError(
-                f"chunk_sequences: reserved column name {c!r} in input"
-            )
+    reserve_cols(df, "chunk_sequences", "_nchunks", chunk_col)
     stride = int(max_len) - int(overlap)
     n = F.size(F.col(tokens))
     n_chunks = (
@@ -407,11 +403,7 @@ def token_budget_mixture(
     """
     require_cols(df, "token_budget_mixture",
                  **{id_col: "atomic", n_tok: "numeric", source: "atomic"})
-    for c in ("_tot", "rate", "keep"):
-        if c in df.columns:
-            raise ValueError(
-                f"token_budget_mixture: reserved column name {c!r} in input"
-            )
+    reserve_cols(df, "token_budget_mixture", "_tot", "rate", "keep")
     totals = df.groupBy(source).agg(
         F.sum(F.col(n_tok)).cast("double").alias("_tot")
     )
@@ -488,8 +480,7 @@ def cap_per_group(
                  **{group_col: "atomic", order_by: "orderable"})
     if n <= 0:
         raise ValueError("cap_per_group: n must be positive")
-    if "_cap_rank" in df.columns:
-        raise ValueError("cap_per_group: reserved column '_cap_rank' in input")
+    reserve_cols(df, "cap_per_group", "_cap_rank")
     ob = [F.col(order_by).desc() if descending else F.col(order_by).asc()]
     if tiebreak:
         ob.append(F.col(tiebreak).asc())

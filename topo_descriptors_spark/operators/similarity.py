@@ -17,11 +17,22 @@ kernel pattern of SURVEY.md J3).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from topo_descriptors_spark.functions.validate import require_cols
 
@@ -54,6 +65,37 @@ def with_norm(df: DataFrame, vec: str = "embedding", out: str = "_norm") -> Data
     return df.withColumn(out, norm_col(vec))
 
 
+def _all_pairs_sides(
+    df: DataFrame, op: str, id_col: str, vec: str, max_rows: int | None,
+    scale_path: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The two sides of a quarantined all-pairs self-join:
+    ``(id_a, va, na)`` and ``(id_b, vb, nb)`` with the L2 norms.
+
+    The ``max_rows`` guard raises on inputs larger than the bound
+    instead of silently launching an O(n²) plan (the bounded
+    ``limit(max+1).count()`` probe is the cost of the guard).
+    Zero-norm vectors have no defined cosine (0/0 = NaN, and Spark
+    orders NaN ABOVE every number, so a NaN would win a top-k or pass a
+    ``>=`` threshold) — they are excluded from both sides up front.
+    """
+    require_cols(df, op, **{id_col: "atomic", vec: "array_numeric"})
+    if max_rows is not None and df.limit(max_rows + 1).count() > max_rows:
+        raise ValueError(
+            f"{op}: input exceeds max_rows={max_rows} — the all-pairs "
+            "baseline is quarantined to oracle-sized inputs; use "
+            f"{scale_path} at scale, or pass max_rows=None to override"
+        )
+    normed = with_norm(df.select(id_col, vec), vec).where(F.col("_norm") > 0)
+    return tuple(
+        normed.select(
+            F.col(id_col).alias(f"id_{s}"), F.col(vec).alias(f"v{s}"),
+            F.col("_norm").alias(f"n{s}"),
+        )
+        for s in "ab"
+    )
+
+
 def cosine_topk(
     df: DataFrame,
     k: int = 5,
@@ -72,28 +114,10 @@ def cosine_topk(
     ANN paths (:func:`ann_topk_blocked`, :func:`ivf_topk`), never the
     production plan.  The ``max_rows`` guard enforces that — inputs
     larger than it raise instead of silently launching an all-pairs
-    join; pass ``max_rows=None`` only when you really mean it (the
-    bounded ``limit(max+1).count()`` probe is the cost of the guard).
+    join; pass ``max_rows=None`` only when you really mean it.
     """
-    require_cols(df, "cosine_topk", **{id_col: "atomic", vec: "array_numeric"})
-    if max_rows is not None:
-        n = df.limit(max_rows + 1).count()
-        if n > max_rows:
-            raise ValueError(
-                f"cosine_topk: input exceeds max_rows={max_rows} — the "
-                "all-pairs baseline is quarantined to oracle-sized inputs; "
-                "use ann_topk_blocked/ivf_topk at scale, or pass "
-                "max_rows=None to override"
-            )
-    # zero-norm vectors have no defined cosine (0/0 = NaN, and Spark
-    # orders NaN ABOVE every number, so a NaN would win the top-k) —
-    # they are excluded from both sides up front
-    a = with_norm(df.select(id_col, vec), vec).where(F.col("_norm") > 0).select(
-        F.col(id_col).alias("id_a"), F.col(vec).alias("va"), F.col("_norm").alias("na")
-    )
-    b = with_norm(df.select(id_col, vec), vec).where(F.col("_norm") > 0).select(
-        F.col(id_col).alias("id_b"), F.col(vec).alias("vb"), F.col("_norm").alias("nb")
-    )
+    a, b = _all_pairs_sides(df, "cosine_topk", id_col, vec, max_rows,
+                            "ann_topk_blocked/ivf_topk")
     pairs = a.join(b, F.col("id_a") != F.col("id_b"))
     cos = F.round(
         dot_col("va", "vb") / (F.col("na") * F.col("nb")), round_digits
@@ -122,37 +146,15 @@ def embedding_cosine_pairs_exact(
 
     QUARANTINED at scale exactly like :func:`cosine_topk`: this is the
     only legitimate home for an all-pairs self-join, and the ``max_rows``
-    guard raises on inputs larger than the bound instead of silently
-    launching an O(n²) plan.  Use the LSH-bucketed
+    guard raises on inputs larger than the bound.  Use the LSH-bucketed
     :func:`embedding_near_dup_pairs` at scale.
 
     The threshold is applied to the ROUNDED cosine when ``round_digits``
     is set, so engine-order float noise at the boundary cannot flip pair
     membership between engines.
     """
-    require_cols(df, "embedding_cosine_pairs_exact",
-                 **{id_col: "atomic", vec: "array_numeric"})
-    if max_rows is not None:
-        n = df.limit(max_rows + 1).count()
-        if n > max_rows:
-            raise ValueError(
-                f"embedding_cosine_pairs_exact: input exceeds "
-                f"max_rows={max_rows} — the all-pairs baseline is "
-                "quarantined to oracle-sized inputs; use "
-                "embedding_near_dup_pairs at scale, or pass "
-                "max_rows=None to override"
-            )
-    # zero-norm vectors yield cosine = 0/0 = NaN, which Spark orders
-    # GREATER than any number — `cosine >= threshold` would admit every
-    # NaN pair; exclude zero-norm rows from both sides instead
-    a = with_norm(df.select(id_col, vec), vec).where(F.col("_norm") > 0).select(
-        F.col(id_col).alias("id_a"), F.col(vec).alias("va"),
-        F.col("_norm").alias("na"),
-    )
-    b = with_norm(df.select(id_col, vec), vec).where(F.col("_norm") > 0).select(
-        F.col(id_col).alias("id_b"), F.col(vec).alias("vb"),
-        F.col("_norm").alias("nb"),
-    )
+    a, b = _all_pairs_sides(df, "embedding_cosine_pairs_exact", id_col, vec,
+                            max_rows, "embedding_near_dup_pairs")
     pairs = a.join(b, F.col("id_a") < F.col("id_b"))
     cos = dot_col("va", "vb") / (F.col("na") * F.col("nb"))
     if round_digits is not None:
@@ -204,6 +206,43 @@ def ann_bucket_stats(
     )
 
 
+def _group_topk(
+    id_type: DataType, id_col: str, vec: str, k: int, round_digits: int,
+    rank: bool,
+) -> tuple[Callable[[pd.DataFrame], pd.DataFrame], StructType]:
+    """The per-group exact cosine top-k kernel of the ANN paths and its
+    ``applyInPandas`` output schema ``(id_a, id_b[, rank], cosine)``.
+
+    Per group: normalize -> one BLAS matmul -> round to
+    ``round_digits`` -> lexsort by cosine desc, neighbor id asc; each
+    row keeps at most ``k`` neighbors (a 1-row group yields none).  The
+    closure uses only numpy and pandas, so executors unpickle it
+    without the package on their import path.
+    """
+    fields = [StructField("id_a", id_type), StructField("id_b", id_type)]
+    if rank:
+        fields.append(StructField("rank", IntegerType()))
+    schema = StructType(fields + [StructField("cosine", DoubleType())])
+
+    def topk(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = pdf[id_col].to_numpy()
+        m = np.stack(pdf[vec].to_numpy()).astype(np.float64)
+        m = m / np.linalg.norm(m, axis=1, keepdims=True)
+        c = np.round(m @ m.T, round_digits)
+        np.fill_diagonal(c, -np.inf)
+        n = len(ids)
+        kk = max(min(k, n - 1), 0)
+        # order: cosine desc, neighbor id asc (lexsort: last key primary)
+        order = np.lexsort((np.broadcast_to(ids, c.shape), -c), axis=1)[:, :kk]
+        out = {"id_a": np.repeat(ids, kk), "id_b": ids[order.ravel()]}
+        if rank:
+            out["rank"] = pd.Series(np.tile(np.arange(1, kk + 1), n), dtype="int32")
+        out["cosine"] = c[np.repeat(np.arange(n), kk), order.ravel()]
+        return pd.DataFrame(out)
+
+    return topk, schema
+
+
 def ann_topk_blocked(
     df: DataFrame,
     k: int = 5,
@@ -243,13 +282,6 @@ def ann_topk_blocked(
     stats helper, never silent.
     """
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
     require_cols(df, "ann_topk_blocked", **{id_col: "atomic", vec: "array_numeric"})
     # zero-norm (and therefore empty-array) vectors have no defined
@@ -261,19 +293,15 @@ def ann_topk_blocked(
     # wrong-dimension vectors still RAISE (guard, not truncate), the
     # documented policy of cosine_topk_join_blocked.
     df = df.where(norm_col(vec) > 0)
+    topk_in_bucket, schema = _group_topk(
+        df.schema[id_col].dataType, id_col, vec, k, round_digits, rank=True
+    )
     if dim is None:  # schema-level fact; pass it to keep planning job-free
         first = df.select(vec).first()
         if first is None:  # nothing rankable survives the filter
-            id_type = df.schema[id_col].dataType
-            from pyspark.sql.types import DoubleType as _D, IntegerType as _I
-            from pyspark.sql.types import StructField as _F, StructType as _S
-            return df.sparkSession.createDataFrame([], _S([
-                _F("id_a", id_type), _F("id_b", id_type),
-                _F("rank", _I()), _F("cosine", _D()),
-            ]))
+            return df.sparkSession.createDataFrame([], schema)
         dim = len(first[0])
     planes = hyperplanes(dim, n_planes, seed)
-    id_dtype = dict(df.dtypes)[id_col]
 
     @pandas_udf(LongType())
     def bucket_udf(v: pd.Series) -> pd.Series:
@@ -286,43 +314,6 @@ def ann_topk_blocked(
             ) from e
         signs = (m @ planes.T) > 0
         return pd.Series((signs * (1 << np.arange(n_planes))).sum(axis=1).astype(np.int64))
-
-    schema = StructType(
-        [
-            StructField("id_a", df.schema[id_col].dataType),
-            StructField("id_b", df.schema[id_col].dataType),
-            StructField("rank", IntegerType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
-    def topk_in_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
-        m = np.stack(pdf[vec].to_numpy()).astype(np.float64)
-        m = m / np.linalg.norm(m, axis=1, keepdims=True)
-        c = np.round(m @ m.T, round_digits)
-        np.fill_diagonal(c, -np.inf)
-        kk = min(k, len(ids) - 1)
-        if kk <= 0:
-            return pd.DataFrame(
-                {
-                    "id_a": pd.Series(dtype=ids.dtype),
-                    "id_b": pd.Series(dtype=ids.dtype),
-                    "rank": pd.Series(dtype="int32"),
-                    "cosine": pd.Series(dtype="float64"),
-                }
-            )
-        # order: cosine desc, neighbor id asc (lexsort: last key primary)
-        order = np.lexsort((np.broadcast_to(ids, c.shape), -c), axis=1)[:, :kk]
-        n = len(ids)
-        return pd.DataFrame(
-            {
-                "id_a": np.repeat(ids, kk),
-                "id_b": ids[order.ravel()],
-                "rank": pd.Series(np.tile(np.arange(1, kk + 1), n), dtype="int32"),
-                "cosine": c[np.repeat(np.arange(n), kk), order.ravel()],
-            }
-        )
 
     bucketed = df.select(id_col, vec).withColumn("_bucket", bucket_udf(vec))
     group_keys = ["_bucket"]
@@ -365,14 +356,6 @@ def ivf_topk(
     well-distributed keys.
     """
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
     require_cols(df, "ivf_topk", **{id_col: "atomic", vec: "array_numeric"})
     # zero-norm vectors have no defined cosine (their numpy
@@ -406,42 +389,12 @@ def ivf_topk(
         order = np.argsort(-sim, axis=1, kind="stable")[:, :n_probe]
         return pd.Series(list(order.astype(np.int32)))
 
-    schema = StructType(
-        [
-            StructField("id_a", df.schema[id_col].dataType),
-            StructField("id_b", df.schema[id_col].dataType),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
-    def candidates_in_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
-        m = np.stack(pdf[vec].to_numpy()).astype(np.float64)
-        m = m / np.linalg.norm(m, axis=1, keepdims=True)
-        c = np.round(m @ m.T, round_digits)
-        np.fill_diagonal(c, -np.inf)
-        kk = min(k, len(ids) - 1)
-        if kk <= 0:
-            return pd.DataFrame(
-                {
-                    "id_a": pd.Series(dtype=ids.dtype),
-                    "id_b": pd.Series(dtype=ids.dtype),
-                    "cosine": pd.Series(dtype="float64"),
-                }
-            )
-        order = np.lexsort((np.broadcast_to(ids, c.shape), -c), axis=1)[:, :kk]
-        n = len(ids)
-        return pd.DataFrame(
-            {
-                "id_a": np.repeat(ids, kk),
-                "id_b": ids[order.ravel()],
-                "cosine": c[np.repeat(np.arange(n), kk), order.ravel()],
-            }
-        )
-
     probed = (
         df.select(id_col, vec)
         .withColumn("_cell", F.explode(probe_cells(vec)))
+    )
+    candidates_in_cell, schema = _group_topk(
+        df.schema[id_col].dataType, id_col, vec, k, round_digits, rank=False
     )
     cands = probed.groupBy("_cell").applyInPandas(candidates_in_cell, schema)
     # global top-k per query across probed cells (dedupe multiprobe hits)
@@ -669,8 +622,6 @@ def cosine_topk_join_blocked(
     Ragged or dimension-mismatched embeddings raise (guard, not
     truncate).
     """
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     _check_retrieval_queries(queries, corpus, id_col, vec, max_query_rows)
     kk = int(k)
     rd = int(round_digits)
@@ -692,9 +643,8 @@ def cosine_topk_join_blocked(
             StructField("cosine", DoubleType()),
         ]
     )
-    scored_schema = schema
     if not q_rows:
-        empty = corpus.sparkSession.createDataFrame([], scored_schema)
+        empty = corpus.sparkSession.createDataFrame([], schema)
         return empty.withColumn("rank", F.lit(1).cast("int")).where(F.lit(False))
     Q = np.stack(q_rows)
     qid_arr = np.asarray(q_ids, dtype=object)
@@ -755,7 +705,7 @@ def cosine_topk_join_blocked(
                 os_.extend(sj[sel].tolist())
             yield pd.DataFrame({"id_q": oq, "id_c": oc, "cosine": os_})
 
-    scored = corpus.select(id_col, vec).mapInPandas(score, scored_schema)
+    scored = corpus.select(id_col, vec).mapInPandas(score, schema)
     ranked = scored.withColumn(
         "rank",
         F.row_number().over(

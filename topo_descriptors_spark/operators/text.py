@@ -481,9 +481,6 @@ def dedup_lines(
     """
     require_cols(df, "dedup_lines", **{id_col: "atomic", text: "string"})
     reserve_cols(df, "dedup_lines", "_larr", "_stop", "_stop_n", "_kept")
-    for c in ("_larr", "_stop", "_stop_n", "_kept"):
-        if c in df.columns:
-            raise ValueError(f"dedup_lines: reserved column name {c!r} in input")
     arr = F.split(F.col(text), F.lit(sep), -1)
     lines = (
         df.select(F.explode_outer(arr).alias("_line"))

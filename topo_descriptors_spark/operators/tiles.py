@@ -47,6 +47,7 @@ from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from topo_descriptors_spark.functions import kernels as K
 from topo_descriptors_spark.functions.geometry import sx_distance, sx_offsets
+from topo_descriptors_spark.functions.planner import gaussian_weights
 from topo_descriptors_spark.functions.validate import require_cols
 
 # kernel(dense_array, (ly0, ly1, lx0, lx1), (origin_y, origin_x)) ->
@@ -193,7 +194,7 @@ def apply_grid_kernel(
 def _halo_for(size: int = 0, sigma: float | None = None, extra: int = 0) -> int:
     h = int(size) + extra
     if sigma:
-        h += int(4 * float(sigma) + 0.5)
+        h += len(gaussian_weights(sigma)) // 2
     return max(h, 1)
 
 

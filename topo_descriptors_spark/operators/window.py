@@ -34,7 +34,7 @@ from topo_descriptors_spark.functions.planner import (
     frame_half_width,
     gaussian_weights,
 )
-from topo_descriptors_spark.functions.validate import require_cols
+from topo_descriptors_spark.functions.validate import require_cols, reserve_cols
 
 
 def _check_seq(
@@ -213,12 +213,7 @@ def gaussian_ma_arrow(
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     _check_seq(df, "gaussian_ma_arrow", entity, order, value)
-    clash = {"_pos", "_chunk", "is_core"} & set(df.columns)
-    if clash:
-        raise ValueError(
-            f"gaussian_ma_arrow: input columns {sorted(clash)} collide with "
-            "internal chunking columns; rename them first"
-        )
+    reserve_cols(df, "gaussian_ma_arrow", "_pos", "_chunk", "is_core")
     banks = {s: np.asarray(gaussian_weights(s), dtype=np.float64) for s in sigmas}
     names = {s: f"{prefix}_{str(s).replace('.', 'p')}" for s in sigmas}
     halo = max(len(w) // 2 for w in banks.values())
@@ -422,11 +417,7 @@ def decayed_features(
     are skipped by the count.
     """
     _check_seq(df, "decayed_features", entity, order, value, axis="time_axis")
-    for c in ("_dh", "_tnow"):
-        if c in df.columns:
-            raise ValueError(
-                f"decayed_features: reserved column name {c!r} in input"
-            )
+    reserve_cols(df, "decayed_features", "_dh", "_tnow")
     ob = [F.col(order)] + ([F.col(tiebreak)] if tiebreak else [])
     w = (
         Window.partitionBy(entity)
@@ -603,12 +594,7 @@ def sequence_chunks_with_halo(
     (row distance == position distance) for frame equivalence."""
     if halo >= chunk_size:
         raise ValueError("halo must be smaller than chunk_size")
-    clash = {"_chunk", "is_core", "_off"} & set(df.columns)
-    if clash:
-        raise ValueError(
-            f"sequence_chunks_with_halo: input columns {sorted(clash)} "
-            "collide with internal chunking columns; rename them first"
-        )
+    reserve_cols(df, "sequence_chunks_with_halo", "_chunk", "is_core", "_off")
     c = F.lit(int(chunk_size))
     base = F.floor(F.col(order) / c)
     d = df.withColumn("_off", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
@@ -636,7 +622,7 @@ def multiscale_features_chunked(
                  **{entity: "atomic", order: "numeric", value: "numeric"})
     halo = max(frame_half_width(max(scales_pxl)), 1)
     for s in sigmas or []:
-        halo = max(halo, int(4 * float(s) + 0.5))
+        halo = max(halo, len(gaussian_weights(s)) // 2)
     chunked = sequence_chunks_with_halo(df, chunk_size, halo, entity, order)
     w = Window.partitionBy(entity, "_chunk").orderBy(order)
     v = F.col(value)
