@@ -231,20 +231,32 @@ def q_tpi_chunked(spark, sf_dir):
 # as-of joins (SURVEY.md §2.3 J1)
 # ---------------------------------------------------------------------------
 
-def q_asof_events(spark, sf_dir):
-    """Each click sees the user's latest purchase at-or-before it."""
+def _clicks_purchases(spark, sf_dir, value_alias):
+    """The as-of contract inputs: click rows as queries ``(q_id, user_id,
+    q_ts)`` and purchase rows as state ``(user_id, ts, <value_alias>)``."""
     ev = _events(spark, sf_dir)
     clicks = ev.where(F.col("event_type") == "click").select(
         F.col("event_id").alias("q_id"), "user_id", F.col("ts").alias("q_ts")
     )
     purchases = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("value").alias("purchase_value")
+        "user_id", "ts", F.col("value").alias(value_alias)
     )
-    out = asof_join(clicks, purchases, on="user_id", q_ts="q_ts", s_ts="ts")
+    return clicks, purchases
+
+
+def _asof_rows(out, value_alias):
+    """The as-of contract output columns, value rounded for the hash."""
     return out.select(
         "q_id", "user_id", "q_ts", "matched_ts",
-        _r("purchase_value").alias("purchase_value"),
+        _r(value_alias).alias(value_alias),
     )
+
+
+def q_asof_events(spark, sf_dir):
+    """Each click sees the user's latest purchase at-or-before it."""
+    clicks, purchases = _clicks_purchases(spark, sf_dir, "purchase_value")
+    out = asof_join(clicks, purchases, on="user_id", q_ts="q_ts", s_ts="ts")
+    return _asof_rows(out, "purchase_value")
 
 
 def q_asof_bucketed(spark, sf_dir):
@@ -252,52 +264,33 @@ def q_asof_bucketed(spark, sf_dir):
     the gate — same semantics as q_asof_events, same DuckDB oracle, but
     the bounded-partition physical plan (carry-in forward fill across
     buckets), so the skew path itself is hash-verified."""
-    ev = _events(spark, sf_dir)
-    clicks = ev.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("q_id"), "user_id", F.col("ts").alias("q_ts")
-    )
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("value").alias("purchase_value")
-    )
+    clicks, purchases = _clicks_purchases(spark, sf_dir, "purchase_value")
     out = asof_join_bucketed(
         clicks, purchases, on="user_id", q_ts="q_ts", s_ts="ts",
         bucket_seconds=21600.0,
     )
-    return out.select(
-        "q_id", "user_id", "q_ts", "matched_ts",
-        _r("purchase_value").alias("purchase_value"),
-    )
+    return _asof_rows(out, "purchase_value")
 
 
 def q_asof_tolerance(spark, sf_dir):
     """As-of with a max-staleness tolerance: matches older than 6h are
     nulled (query rows survive) — the PIT-join freshness knob, through
     the gate."""
-    ev = _events(spark, sf_dir)
-    clicks = ev.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("q_id"), "user_id", F.col("ts").alias("q_ts")
-    )
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("value").alias("purchase_value")
-    )
+    clicks, purchases = _clicks_purchases(spark, sf_dir, "purchase_value")
     out = asof_join(clicks, purchases, on="user_id", q_ts="q_ts", s_ts="ts",
                     tolerance_seconds=21600.0)
-    return out.select(
-        "q_id", "user_id", "q_ts", "matched_ts",
-        _r("purchase_value").alias("purchase_value"),
-    )
+    return _asof_rows(out, "purchase_value")
 
 
 FUSED_NQ = 3
 
 
 def q_asof_fused(spark, sf_dir):
-    """The fused single-shuffle asof+frame-features operator through the
-    gate: TPI/std frames AND the PIT match in one window pass over the
-    interleaved union (asof.py:asof_with_frame_features).  Positions are
-    row_number per user (ties pinned by event_id); query positions come
-    from the portable hash so the oracle can replay them."""
-    from topo_descriptors_spark.operators.asof import asof_with_frame_features
+    """Frame features at the point-in-time match through the gate: TPI/std
+    over the per-user sequence (window.multiscale_features), then the PIT
+    match of each query position (asof_join).  Positions are row_number
+    per user (ties pinned by event_id); query positions come from the
+    portable hash so the oracle can replay them."""
     from topo_descriptors_spark.operators.text import PORTABLE_HASH_SQL
 
     ev = _events(spark, sf_dir)
@@ -315,9 +308,12 @@ def q_asof_fused(spark, sf_dir):
             F.expr(f"transform(sequence(0, {FUSED_NQ - 1}), i -> {h} % n)")
         ).alias("q_pos"),
     )
-    out = asof_with_frame_features(
-        seq, q, on="user_id", pos="pos", q_pos="q_pos", value="value",
-        scales_pxl=[9],
+    feats = W.multiscale_features(
+        seq, [9], value="value", entity="user_id", order="pos"
+    )
+    out = asof_join(
+        q, feats.select("user_id", "pos", "tpi_9", "std_9"),
+        on="user_id", q_ts="q_pos", s_ts="pos",
     )
     return out.select(
         "user_id", "q_pos", "matched_ts",
@@ -1572,21 +1568,12 @@ def q_cum_distinct(spark, sf_dir):
 def q_asof_forward(spark, sf_dir):
     """Each click sees the user's NEXT purchase at-or-after it
     (label/outcome attachment — the forward as-of direction)."""
-    ev = _events(spark, sf_dir)
-    clicks = ev.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("q_id"), "user_id", F.col("ts").alias("q_ts")
-    )
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("value").alias("next_purchase")
-    )
+    clicks, purchases = _clicks_purchases(spark, sf_dir, "next_purchase")
     out = asof_join(
         clicks, purchases, on="user_id", q_ts="q_ts", s_ts="ts",
         direction="forward",
     )
-    return out.select(
-        "q_id", "user_id", "q_ts", "matched_ts",
-        _r("next_purchase").alias("next_purchase"),
-    )
+    return _asof_rows(out, "next_purchase")
 
 
 def q_window_counts_stream(spark, sf_dir):
@@ -1613,21 +1600,12 @@ def q_window_counts_stream(spark, sf_dir):
 def q_asof_nearest(spark, sf_dir):
     """Each click sees the user's purchase CLOSEST in time, either side
     (ties → backward); the nearest as-of direction through the gate."""
-    ev = _events(spark, sf_dir)
-    clicks = ev.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("q_id"), "user_id", F.col("ts").alias("q_ts")
-    )
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("value").alias("nearest_purchase")
-    )
+    clicks, purchases = _clicks_purchases(spark, sf_dir, "nearest_purchase")
     out = asof_join(
         clicks, purchases, on="user_id", q_ts="q_ts", s_ts="ts",
         direction="nearest",
     )
-    return out.select(
-        "q_id", "user_id", "q_ts", "matched_ts",
-        _r("nearest_purchase").alias("nearest_purchase"),
-    )
+    return _asof_rows(out, "nearest_purchase")
 
 
 def q_asof_nearest_strict(spark, sf_dir):
@@ -1636,21 +1614,12 @@ def q_asof_nearest_strict(spark, sf_dir):
     closest row — completes the pandas.merge_asof surface
     (allow_exact_matches=False).  One shuffle, two sorts (the one as-of
     shape whose two frames need opposite equal-ts secondary sorts)."""
-    ev = _events(spark, sf_dir)
-    clicks = ev.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("q_id"), "user_id", F.col("ts").alias("q_ts")
-    )
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("value").alias("nearest_purchase")
-    )
+    clicks, purchases = _clicks_purchases(spark, sf_dir, "nearest_purchase")
     out = asof_join(
         clicks, purchases, on="user_id", q_ts="q_ts", s_ts="ts",
         direction="nearest", strict=True,
     )
-    return out.select(
-        "q_id", "user_id", "q_ts", "matched_ts",
-        _r("nearest_purchase").alias("nearest_purchase"),
-    )
+    return _asof_rows(out, "nearest_purchase")
 
 
 def q_ohlc(spark, sf_dir):
@@ -2364,8 +2333,8 @@ def _s_rand_proj_sql(out_dim: int = 8, seed: int = 11) -> str:
 
 def _j_asof_fused_sql() -> str:
     """Replays q_asof_fused: row_number positions (ties pinned by
-    event_id), ROWS-frame TPI/std (equivalent to the fused RANGE frame
-    on dense positions), hash query positions, PIT gather."""
+    event_id), ROWS-frame TPI/std (multiscale_features' frame), hash
+    query positions, PIT gather."""
     h = _DH.format(s="(user_id::VARCHAR || '#' || i::VARCHAR)")
     return f"""
         WITH s AS (

@@ -255,56 +255,31 @@ def test_null_state_value_preserved(spark):
     assert out.loc[0, "matched_ts"] == pd.Timestamp("2024-01-01 01:00")
 
 
-def test_fused_frame_features_equal_two_pass(spark):
-    """asof_with_frame_features == two-pass (features window then asof),
-    with half the exchanges."""
-    import re
-
-    from pyspark.sql import Window as W_
-
-    from topo_descriptors_spark.operators.asof import asof_with_frame_features
-    from topo_descriptors_spark.sources import synthetic
-
-    tok = synthetic.documents_tok(spark, n_docs=300).withColumn(
-        "doc_key", F.xxhash64("doc_id")
+def test_bucketed_null_state_value_carried_in(spark):
+    """The latest state row of an EARLIER bucket has a NULL value: the
+    carry-in must still win over the older non-null row (as the plain
+    form does in test_null_state_value_preserved)."""
+    state = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "entity_id": ["a", "a"],
+                "ts": pd.to_datetime(["2024-01-01 00:00", "2024-01-01 01:00"]),
+                "value": [1.0, None],
+            }
+        )
     )
-    seq = tok.select(
-        "doc_key", F.posexplode("tokens").alias("pos", "token")
-    ).select("doc_key", F.col("pos").cast("long").alias("pos"),
-             F.col("token").cast("double").alias("value"))
-    q = tok.select(
-        "doc_key", "n_tok", F.explode(F.sequence(F.lit(0), F.lit(4))).alias("qi")
-    ).select("doc_key", F.pmod(F.xxhash64("doc_key", "qi"), F.col("n_tok"))
-             .cast("long").alias("q_pos"))
-
-    k = 4
-    w = W_.partitionBy("doc_key").orderBy("pos").rowsBetween(-k, k)
-    feats = seq.select(
-        "*",
-        (F.col("value") - (F.sum("value").over(w) - F.col("value"))
-         / (F.count("value").over(w) - 1)).alias("tpi_9"),
-        F.stddev_samp("value").over(w).alias("std_9"),
+    q = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "entity_id": ["a"],
+                "q_ts": pd.to_datetime(["2024-01-03 02:00"]),
+                "q_id": [0],
+            }
+        )
     )
-    two = asof_join(q, feats.select("doc_key", "pos", "tpi_9", "std_9"),
-                    on="doc_key", q_ts="q_pos", s_ts="pos").toPandas()
-    fused_df = asof_with_frame_features(seq, q, on="doc_key", scales_pxl=[9])
-    fused = fused_df.toPandas()
-
-    import numpy as np
-    key = ["doc_key", "q_pos"]
-    a = two.sort_values(key).reset_index(drop=True)
-    b = fused.sort_values(key).reset_index(drop=True)
-    assert len(a) == len(b)
-    assert a["matched_ts"].astype("int64").equals(b["matched_ts"].astype("int64"))
-    for c in ("tpi_9", "std_9"):
-        assert np.allclose(a[c].to_numpy(float), b[c].to_numpy(float), equal_nan=True)
-    # each input exchanged once (one Exchange per union branch) and the
-    # computed features never re-shuffled: no Exchange above the Window
-    plan = fused_df._jdf.queryExecution().executedPlan().toString()
-    n_exchange = len(re.findall(r"^[\s+:*-]*Exchange\b", plan, re.M))
-    assert n_exchange <= 2, plan
-    first_window = plan.index("Window")
-    assert "Exchange" not in plan[:first_window].split("ResultQueryStage")[-1]
+    out = asof_join_bucketed(q, state, on="entity_id").toPandas()
+    assert pd.isna(out.loc[0, "value"])
+    assert out.loc[0, "matched_ts"] == pd.Timestamp("2024-01-01 01:00")
 
 
 def test_interval_join_containment_and_left(spark):

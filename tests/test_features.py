@@ -1,6 +1,7 @@
 """Tabular feature-engineering operators (operators/features.py):
 encodings, hashing trick, rolling quantiles, KMV sketch, binning,
-correlation, OHLC bars, salted aggregation — semantics pinned on hand-computable fixtures, plan shapes
+correlation, OHLC bars, salted aggregation, heavy hitters, count-min
+sketch — semantics pinned on hand-computable fixtures, plan shapes
 pinned on the real parquet."""
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ from pyspark.sql import functions as F
 
 from topo_descriptors_spark.functions.validate import SchemaError
 from topo_descriptors_spark.operators import features as FE
+from topo_descriptors_spark.operators.features import heavy_hitters
 from topo_descriptors_spark.sources.io import read_table
 
 
@@ -660,3 +662,61 @@ def test_salted_agg_validates(spark):
         salted_agg(df, "k", {"v": ["median"]})
     with pytest.raises(ValueError, match="salt_buckets"):
         salted_agg(df, "k", {"v": ["sum"]}, salt_buckets=1)
+
+
+# ------------------------------------------------------------ heavy hitters
+
+
+def test_heavy_hitters_shares(spark):
+    rows = [("a",)] * 5 + [("b",)] * 3 + [("c",)] * 2
+    df = spark.createDataFrame(rows, "k string")
+    out = heavy_hitters(df, "k", k=2).collect()
+    assert [(r.k, r.n, r.rank) for r in out] == [("a", 5, 1), ("b", 3, 2)]
+    assert out[0].share == 0.5 and out[0].cum_share == 0.5
+    assert out[1].share == 0.3 and out[1].cum_share == 0.8
+
+
+def test_heavy_hitters_tie_break(spark):
+    rows = [("b",)] * 2 + [("a",)] * 2 + [("c",)]
+    df = spark.createDataFrame(rows, "k string")
+    out = heavy_hitters(df, "k", k=3).collect()
+    assert [r.k for r in out] == ["a", "b", "c"]  # count desc, then key asc
+
+
+# ------------------------------------------------------------------- CMS
+
+
+def test_cms_overestimates_only(spark):
+    rows = [(i % 37,) for i in range(1000)]
+    df = spark.createDataFrame(rows, "k int")
+    from topo_descriptors_spark.operators.features import cms_counts
+
+    out = cms_counts(df, "k", depth=4, width=16).collect()  # narrow → collisions
+    assert len(out) == 37
+    assert all(r.est >= r.n_true for r in out)
+    # error bound sanity: with d=4 rows the min cell is rarely far off
+    assert sum(r.est == r.n_true for r in out) > 0
+
+
+def test_cms_wide_sketch_is_exact(spark):
+    rows = [("a",)] * 5 + [("b",)] * 3 + [("c",)]
+    df = spark.createDataFrame(rows, "k string")
+    from topo_descriptors_spark.operators.features import cms_counts
+
+    out = {r.k: (r.est, r.n_true) for r in
+           cms_counts(df, "k", depth=4, width=4096).collect()}
+    assert out == {"a": (5, 5), "b": (3, 3), "c": (1, 1)}
+
+
+# ------------------------------------------------------------- plan shapes
+
+
+def _plan_of(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_heavy_hitters_topk_not_global_sort(spark):
+    df = spark.createDataFrame([("a",), ("b",)], "k string")
+    plan = _plan_of(heavy_hitters(df, "k", k=5))
+    assert "TakeOrderedAndProject" in plan
+    assert "BroadcastExchange" in plan  # one-row total joins broadcast

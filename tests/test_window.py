@@ -7,6 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from topo_descriptors_spark.functions.planner import gaussian_weights
 from topo_descriptors_spark.operators import window as W
 from topo_descriptors_spark.operators.window import cumulative_distinct
 from topo_descriptors_spark.sources import synthetic
@@ -295,12 +296,12 @@ def test_gaussian_ma_arrow_parity_with_expression_path(spark, sf_dir):
 
 
 def test_gaussian_ma_auto_switch_picks_arrow_for_large_sigma(series_df):
-    """sigma with radius > max_expr_radius must dispatch to the Arrow
-    path (plan contains FlatMapGroupsInPandas, not a lag bank); small
-    sigma stays in the window-expression plan."""
+    """sigma with radius > GAUSSIAN_EXPR_MAX_RADIUS (16.5 -> radius 66)
+    must dispatch to the Arrow path (plan contains FlatMapGroupsInPandas,
+    not a lag bank); small sigma stays in the window-expression plan."""
+    assert len(gaussian_weights(16.5)) // 2 > W.GAUSSIAN_EXPR_MAX_RADIUS
     big = W.gaussian_ma(
-        series_df, [1.0], value="value", entity="entity_id", order="ts",
-        max_expr_radius=2, chunk_size=64,
+        series_df, [16.5], value="value", entity="entity_id", order="ts",
     )
     plan_big = big._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan_big

@@ -137,7 +137,7 @@ def test_singleton_and_isolated_rows_yield_null_not_ansi_error(spark):
     """Regression pin for the sweep's find: a lone-sample TPI frame or a
     single-row entity crashed the stage with DIVIDE_BY_ZERO under Spark 4
     ANSI mode; the engine must return NULL (the reference's 0/0 NaN)."""
-    from topo_descriptors_spark.operators.asof import asof_with_frame_features
+    from topo_descriptors_spark.operators.asof import asof_join
 
     pdf = pd.DataFrame(
         {
@@ -156,7 +156,10 @@ def test_singleton_and_isolated_rows_yield_null_not_ansi_error(spark):
     q = spark.createDataFrame(
         pd.DataFrame({"entity_id": ["lone"], "q_pos": [1]})
     )
-    fused = asof_with_frame_features(
-        df, q, on="entity_id", scales_pxl=[3]
+    feats = W.multiscale_features(df, [3], order="pos")
+    two_pass = asof_join(
+        q, feats.select("entity_id", "pos", "tpi_3", "std_3"),
+        on="entity_id", q_ts="q_pos", s_ts="pos",
     ).collect()
-    assert all(r.tpi_3 is None for r in fused)
+    assert [r.matched_ts for r in two_pass] == [0]
+    assert all(r.tpi_3 is None for r in two_pass)

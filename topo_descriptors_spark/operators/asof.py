@@ -8,22 +8,23 @@ relational recast of the reference's one-sided directional scan (Sx looks
 only at cells strictly behind the target along the azimuth; reference
 topo.py:845, 919-923 — the mask stops lines *before* the center).
 
-Two physical strategies:
+One reduction, :func:`asof_join`: tag both sides, sort by
+``(keys, ts, side)``, propagate the last state struct with
+``last(..., ignorenulls=True)`` over an unbounded-preceding frame.  ONE
+shuffle of (queries+state), one sort — the same cost as a sort-merge
+join, with no range-explosion.  Partition key = join keys.
 
-* :func:`asof_join` — union trick: tag both sides, sort by
-  ``(keys, ts, side)``, propagate the last state struct with
-  ``last(..., ignorenulls=True)`` over an unbounded-preceding frame.
-  ONE shuffle of (queries+state), one sort — the same cost as a
-  sort-merge join, with no range-explosion.  Partition key = join keys.
-* :func:`asof_join_bucketed` — the 100-TB form.  Partition key =
-  ``(keys, time_bucket)``: a hot entity's timeline is split across
-  buckets, so a single entity with 10^9 rows no longer pins one task.
-  Per-bucket carry-in state is computed on the tiny per-bucket-last
-  table (|entities|×|buckets| rows) and re-injected as synthetic rows —
-  two light shuffles of the small table + one of the data.
+:func:`asof_join_bucketed` is its skew form, not a second reduction: it
+partitions by ``(keys, time_bucket)`` so a hot entity's timeline spreads
+over many tasks, computes per-bucket carry-in state on the tiny
+per-bucket-last table (|entities|×|buckets| rows), and hands the
+carry-in rows plus the state to :func:`asof_join` keyed on
+``(keys, bucket)``.  Same rows as the plain form (property-tested, and
+checked against DuckDB ``ASOF JOIN`` by the contract's oracle queries);
+it is slower unless one entity dominates (crossover in its docstring).
 
-Both produce identical results (property-tested, and checked against
-DuckDB ``ASOF JOIN`` by the driver's correctness gate).
+Frame features at the matched state row are the two-pass plan:
+``window.multiscale_features`` over the sequence, then :func:`asof_join`.
 
 Considered and rejected: a ``cogroup().applyInPandas(pd.merge_asof)``
 strategy — measured 3.7x slower than the union trick at 8M state rows
@@ -45,7 +46,7 @@ from topo_descriptors_spark.functions.validate import reserve_cols
 # query side already carrying it would make _unpack emit two columns of
 # that name (Spark allows duplicate names in select) — fail fast instead.
 _RESERVED = (
-    "_ts", "_side", "_state", "_match", "_bucket", "_carry", "matched_ts",
+    "_ts", "_side", "_state", "_match", "matched_ts",
     "_back", "_fwd",  # direction="nearest" intermediates
 )
 
@@ -245,48 +246,42 @@ def asof_join_bucketed(
       2. reduce the state side to its last row per (keys, bucket) —
          a map-side-combinable ``max(struct(ts, payload))`` aggregate;
       3. forward-fill those per-bucket lasts across the union of state
-         and query buckets (window over the *small* table) and shift by
-         one bucket → carry-in state at each bucket's start;
-      4. union carry-in rows (+ in-bucket state + queries) and run the
-         same last-ignorenulls reduction, now partitioned by
-         (keys, bucket) — bounded partition sizes regardless of entity
-         skew, no giant single-entity sort.
+         and query buckets (window over the *small* table), one bucket
+         late → carry-in state rows at each bucket's start;
+      4. run :func:`asof_join` over ``(keys, bucket)`` with the carry-in
+         rows added to the state side — bounded partition sizes
+         regardless of entity skew, no giant single-entity sort.  A
+         carry-in row's ts lies in an earlier bucket, so it sorts before
+         every row of its bucket and the tie rule is ``asof_join``'s own.
+
+    Crossover (4 cores, interleaved reps): on ``j_asof_bucketed`` at
+    sf0.1 it returns the same rows as :func:`asof_join` but takes 0.81 s
+    against 0.35 s; with one hot entity of 12M rows it takes 7.95 s
+    against 11.12 s (faster in 4 of 4 reps).  Use it only when one
+    entity's timeline would pin a task.
     """
     on = [on] if isinstance(on, str) else list(on)
     if value_cols is None:
         value_cols = [c for c in state_df.columns if c not in set(on) | {s_ts}]
-    _check_names(queries_df, value_cols)
+    for side in (queries_df, state_df):
+        reserve_cols(side, "asof_join_bucketed", "_bucket", "_carry")
 
-    q = (
-        queries_df.withColumn("_ts", F.col(q_ts))
-        .withColumn(
-            "_bucket",
-            F.floor(axis_seconds(queries_df, q_ts) / F.lit(float(bucket_seconds))),
-        )
-        .withColumn("_side", F.lit(2))
-    )
-    s_base = state_df.select(
-        *on, F.col(s_ts).alias("_ts"), *[F.col(c) for c in value_cols]
-    )
-    s = (
-        s_base.withColumn(
-            "_bucket",
-            F.floor(axis_seconds(s_base, "_ts") / F.lit(float(bucket_seconds))),
-        )
-        .withColumn("_side", F.lit(1))
-        .withColumn(
-            "_state", F.struct(F.col("_ts").alias("matched_ts"), *value_cols)
-        )
-        .drop(*value_cols)
-    )
+    def bucketed(df: DataFrame, ts: str) -> DataFrame:
+        b = F.floor(axis_seconds(df, ts) / F.lit(float(bucket_seconds)))
+        return df.withColumn("_bucket", b)
+
+    q = bucketed(queries_df, q_ts)
+    s = bucketed(state_df.select(*on, s_ts, *value_cols), s_ts)
 
     # (2) last state per (keys, bucket): max over the ts-led struct is the
     # row with the largest ts — partial-aggregated map-side, tiny output.
-    bucket_last = s.groupBy(*on, "_bucket").agg(F.max("_state").alias("_state"))
+    last = s.groupBy(*on, "_bucket").agg(
+        F.max(F.struct(s_ts, *value_cols)).alias("_carry")
+    )
 
     # (3) carry-in over the bucket domain of BOTH sides.
     domain = (
-        bucket_last.select(*on, "_bucket")
+        last.select(*on, "_bucket")
         .unionByName(q.select(*on, "_bucket"))
         .distinct()
     )
@@ -296,111 +291,20 @@ def asof_join_bucketed(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     carry = (
-        domain.join(bucket_last, on + ["_bucket"], "left")
-        .withColumn("_carry", F.last("_state", ignorenulls=True).over(w_carry))
+        domain.join(last, on + ["_bucket"], "left")
+        .withColumn("_carry", F.last("_carry", ignorenulls=True).over(w_carry))
         .where(F.col("_carry").isNotNull())
         .select(
-            *on,
-            F.col("_bucket"),
-            F.col("_carry").alias("_state"),
-            F.lit(0).alias("_side"),
-            F.lit(None).cast(q.schema["_ts"].dataType).alias("_ts"),
+            *on, "_bucket",
+            *[F.col("_carry")[c].alias(c) for c in (s_ts, *value_cols)],
         )
     )
 
-    # (4) in-bucket reduction.  Sort: carry-in first (_ts NULL → side 0
-    # with nulls-first ts), then by ts; at equal ts state-vs-query order
-    # encodes the inclusive/strict tie rule.
-    merged = q.unionByName(s, allowMissingColumns=True).unionByName(
-        carry, allowMissingColumns=True
-    )
-    if strict:
-        tie = F.when(F.col("_side") == 0, 0).when(F.col("_side") == 2, 1).otherwise(2)
-    else:
-        tie = F.col("_side")
-    w = (
-        Window.partitionBy(*on, "_bucket")
-        .orderBy(F.col("_ts").asc_nulls_first(), tie.asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    merged = merged.withColumn(
-        "_match", F.last("_state", ignorenulls=True).over(w)
-    )
-    out = merged.where(F.col("_side") == 2)
-    keep = [F.col(c) for c in queries_df.columns]
-    keep.append(F.col("_match.matched_ts").alias("matched_ts"))
-    keep.extend(F.col(f"_match.{c}").alias(c) for c in value_cols)
-    return out.select(*keep)
-
-
-def asof_with_frame_features(
-    seq_df: DataFrame,
-    queries_df: DataFrame,
-    on: list[str] | str,
-    pos: str = "pos",
-    q_pos: str = "q_pos",
-    value: str = "value",
-    scales_pxl: list[int] = (9,),
-) -> DataFrame:
-    """Fused single-shuffle plan: frame features (TPI + rolling std per
-    scale) AND the point-in-time match computed in ONE window pass.
-
-    Trick: query rows are interleaved into the sequence with NULL values
-    and a composite order key ``2*pos + side``.  RANGE frames over the
-    composite key span exactly the positions ``[p-k, p+k]`` and ignore
-    the null-valued query rows (SQL aggregates skip nulls), so state
-    rows get bit-identical features to the two-pass plan; the as-of
-    match is the usual last-state struct over an unbounded row frame.
-
-    Each INPUT is exchanged exactly once — the computed feature table is
-    never re-shuffled (the two-pass plan shuffles the sequence for the
-    feature window and then moves the full feature output again for the
-    as-of sort).  At cluster scale this halves the bytes on the wire of
-    the dominant table.  Locally it is
-    roughly cost-neutral (sliding RANGE frames evaluate slower than ROW
-    frames), so the default pipelines keep the two-pass form; use this
-    when the shuffle, not the CPU, is the bottleneck.  Only
-    frame-aggregate features fuse — lag/lead-based features (Gaussian
-    bank, Sx) would see the interleaved query rows and break.
-
-    Requires integer positions (the composite key doubles them).
-    Equivalence with the two-pass plan is pinned in tests/test_asof.py.
-    """
-    on = [on] if isinstance(on, str) else list(on)
-    s0 = seq_df.select(
-        *on, F.col(pos).alias("_p"), F.col(value).alias("_v"), F.lit(0).alias("_sd")
-    )
-    q0 = queries_df.select(
-        *on,
-        F.col(q_pos).alias("_p"),
-        F.lit(None).cast("double").alias("_v"),
-        F.lit(1).alias("_sd"),
-    )
-    u = s0.unionByName(q0).withColumn("_c", F.col("_p") * 2 + F.col("_sd"))
-    order = Window.partitionBy(*on).orderBy("_c")
-    feat_cols = []
-    names = []
-    for d in scales_pxl:
-        k = int(d) // 2
-        wr = order.rangeBetween(-2 * k, 2 * k)
-        tpi = F.col("_v") - F.try_divide(
-            F.sum("_v").over(wr) - F.col("_v"),
-            F.count("_v").over(wr) - 1,  # lone-sample frame -> NULL, not ANSI error
-        )
-        feat_cols += [tpi.alias(f"tpi_{d}"), F.stddev_samp("_v").over(wr).alias(f"std_{d}")]
-        names += [f"tpi_{d}", f"std_{d}"]
-    u = u.select("*", *feat_cols)
-    wl = order.rowsBetween(Window.unboundedPreceding, 0)
-    state = F.when(
-        F.col("_sd") == 0,
-        F.struct(F.col("_p").alias("matched_ts"), *[F.col(n) for n in names]),
-    )
-    u = u.withColumn("_m", F.last(state, ignorenulls=True).over(wl))
-    keep = [F.col(c) for c in on]
-    keep.append(F.col("_p").alias(q_pos))
-    keep.append(F.col("_m.matched_ts").alias("matched_ts"))
-    keep.extend(F.col(f"_m.{n}").alias(n) for n in names)
-    return u.where(F.col("_sd") == 1).select(*keep)
+    # (4) the one as-of reduction, now per (keys, bucket).
+    return asof_join(
+        q, s.unionByName(carry), on=on + ["_bucket"], q_ts=q_ts, s_ts=s_ts,
+        value_cols=value_cols, strict=strict,
+    ).drop("_bucket")
 
 
 def interval_join(
